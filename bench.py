@@ -32,6 +32,7 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.operators.dedup import clear_pairs_cache
+from de_project_airflow_etl_spark.queries.mining import _lof_salt
 from de_project_airflow_etl_spark.registry import all_queries
 from de_project_airflow_etl_spark.session import get_spark
 
@@ -288,6 +289,10 @@ def main() -> None:
         "value": total, "unit": "sec", "queries": dict(timings),
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "runs_per_query": runs,
+        # lof_bucket_outliers' plan shape follows the salt, which
+        # follows the core count (queries/mining.py::_lof_salt)
+        "lof_salt": _lof_salt(spark),
+        "cores": spark.sparkContext.defaultParallelism,
     }
     # --merge-with <prior_bench.json>: gate on the per-query MIN of
     # this run and a PRIOR run's timings (round-9 adjudication rule:

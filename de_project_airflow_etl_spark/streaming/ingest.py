@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.tables import (
+    _normalize_event_ts, load, resolve_schema)
 
 # Stateful streaming queries carry one state-store instance per shuffle
 # partition per stateful operator (a stream-stream join carries four).
@@ -66,7 +67,7 @@ def read_event_stream(spark: SparkSession, sf_dir: str,
     # defensive for driver-supplied sessions (see tables.load): the
     # NANOS timestamp is unreadable without this runtime-settable conf
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema  # file schema
+    schema = resolve_schema(spark, path)  # file schema
     # File-source streams take a directory; pathGlobFilter narrows it to
     # the events table only.
     stream = (spark.readStream.schema(schema)
@@ -77,7 +78,6 @@ def read_event_stream(spark: SparkSession, sf_dir: str,
     # with the batch side on the event-time type or the batch/stream-
     # agreement oracles drift (and a second inline copy of the logic
     # would, eventually).
-    from de_project_airflow_etl_spark.tables import _normalize_event_ts
     stream = _normalize_event_ts(spark, stream)
     if with_watermark:
         stream = stream.withWatermark("ts", with_watermark)

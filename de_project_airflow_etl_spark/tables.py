@@ -6,9 +6,30 @@ register temp views so both the DataFrame API and ``spark.sql`` can be
 used against the same inputs.
 
 At 100 TB scale these reads are exactly the same code path — a
-``spark.read.parquet`` over a partitioned lake directory; Catalyst
-handles partition pruning / predicate pushdown / column pruning from
-the declarative plan.
+parquet scan over a partitioned lake directory; Catalyst handles
+partition pruning / predicate pushdown / column pruning from the
+declarative plan.
+
+Schema resolution. In the reference deployment Trino takes a table's
+schema from the Hive metastore's declared DDL and never opens a parquet
+footer at query time. The testdata tables are bare parquet files with
+no declared schema, and ``spark.read.parquet`` infers one with a Spark
+job on every call. ``resolve_schema`` stands in for the declared schema: the first
+read of a table infers it, and later reads pass the same ``StructType``
+to ``spark.read.schema(...)`` and launch no job. A table re-infers when
+any of these change:
+
+* its absolute path;
+* its data files, fingerprinted as (relative name, size,
+  ``st_mtime_ns``) of every non-hidden file, so a rewritten single
+  file and a rewritten Spark output directory both count;
+* a session conf that changes how parquet types are inferred
+  (``_INFERENCE_CONFS``).
+
+Only the ``StructType`` is cached, never a DataFrame: a DataFrame
+carries fixed attribute ids, and queries that load one table twice and
+join it with itself (TPC-H Q21 over ``lineitem``) need every load to
+produce fresh ones, or the self-join turns ambiguous.
 """
 
 from __future__ import annotations
@@ -16,11 +37,67 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import types as T
 
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 )
+
+# Session confs under which the same parquet footer infers to a
+# different StructType; part of every schema cache key.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+)
+
+# absolute path -> (fingerprint and conf values, schema): one entry per
+# table, replaced when the table re-infers.
+_SCHEMAS: dict[str, tuple[tuple, T.StructType]] = {}
+
+
+def _hidden(name: str) -> bool:
+    """Spark's data-file filter: names starting with ``_`` or ``.`` are
+    metadata (``_SUCCESS``, ``.crc``), except ``_col=value`` partition
+    directories."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
+def _fingerprint(path: str) -> tuple:
+    """(relative name, size, mtime ns) of each data file under ``path``,
+    or of ``path`` itself when it is a file."""
+    if os.path.isfile(path):
+        st = os.stat(path)
+        return (("", st.st_size, st.st_mtime_ns),)
+    files = []
+    for root, dirs, names in os.walk(path):
+        dirs[:] = [d for d in dirs if not _hidden(d)]
+        for n in names:
+            if not _hidden(n):
+                full = os.path.join(root, n)
+                st = os.stat(full)
+                files.append((os.path.relpath(full, path), st.st_size,
+                              st.st_mtime_ns))
+    return tuple(sorted(files))
+
+
+def resolve_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The parquet schema of the table at ``path``, inferred by Spark on
+    the first call and reused while the files and inference confs stay
+    the same. A path that is not on the local file system is inferred
+    every time (it has no fingerprint)."""
+    if not os.path.exists(path):
+        return spark.read.parquet(path).schema
+    path = os.path.abspath(path)
+    stamp = (_fingerprint(path),
+             tuple(spark.conf.get(c) for c in _INFERENCE_CONFS))
+    hit = _SCHEMAS.get(path)
+    if hit is None or hit[0] != stamp:
+        hit = _SCHEMAS[path] = (stamp, spark.read.parquet(path).schema)
+    return hit[1]
 
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -34,7 +111,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # defensively (runtime-settable, idempotent) so every query
         # works on any SparkSession.
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    df = spark.read.schema(resolve_schema(spark, path)).parquet(path)
     if name == "events":
         df = _normalize_event_ts(spark, df)
     return df
@@ -55,7 +133,6 @@ def _normalize_event_ts(spark: SparkSession, df: DataFrame) -> DataFrame:
     implementations encoding-agnostic.
     """
     from pyspark.sql import functions as F
-    from pyspark.sql import types as T
     # Pin the session zone for EVERY encoding (runtime-settable,
     # idempotent — same defensive pattern as nanosAsLong above): the
     # NTZ cast interprets the naive value in the session zone, and

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import math
 import os
+import uuid
 
 import duckdb
 import pandas as pd
@@ -24,6 +25,21 @@ def duck_connection(sf_dir: str) -> duckdb.DuckDBPyConnection:
         path = os.path.join(sf_dir, f"{t}.parquet")
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     return con
+
+
+def jobs_launched(spark, fn):
+    """Run ``fn()`` under a job group of its own; return its result and
+    the number of Spark jobs it launched."""
+    sc = spark.sparkContext
+    group = f"jobs-launched-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    # the status tracker is fed by the listener bus; drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
 
 
 def _canon(df: pd.DataFrame) -> pd.DataFrame:
