@@ -36,6 +36,7 @@ from pyspark.sql.types import LongType, StringType
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import sql_cents
 
 # ------------------------------------------------------------- UDAFs
 #
@@ -182,9 +183,9 @@ def _modal_string(v: pd.Series, w: pd.Series) -> str:
     return best_v
 
 
-_CENTS_PRICE = "CAST(ROUND(l_extendedprice * 100) AS BIGINT)"
-_CENTS_TOTAL = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
-_CENTS_VALUE = "CAST(ROUND(value * 100) AS BIGINT)"
+_CENTS_PRICE = sql_cents("l_extendedprice")
+_CENTS_TOTAL = sql_cents("o_totalprice")
+_CENTS_VALUE = sql_cents("value")
 
 
 # ------------------------------------------- weighted median by brand

@@ -47,6 +47,30 @@ def _walk_jplan(jnode):
         yield from _walk_jplan(children.apply(i))
 
 
+def node_names(df: DataFrame) -> list[str]:
+    """Class names of every node in the pre-AQE physical plan."""
+    jplan = df._jdf.queryExecution().sparkPlan()
+    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
+
+
+def window_nodes(df: DataFrame) -> list:
+    """Every WindowExec node of the pre-AQE physical plan."""
+    jplan = df._jdf.queryExecution().sparkPlan()
+    return [n for n in _walk_jplan(jplan)
+            if n.getClass().getSimpleName().startswith("WindowExec")]
+
+
+def windows_sit_above_aggregates(df: DataFrame) -> None:
+    """Assert the plan has a window and that every window's input
+    subtree contains an Aggregate, i.e. no window runs over raw rows."""
+    windows = window_nodes(df)
+    assert windows, "expected a WindowExec"
+    for wnode in windows:
+        sub = list(_walk_jplan(wnode.children().apply(0)))
+        assert any("Aggregate" in ch.getClass().getSimpleName()
+                   for ch in sub), "window consumes un-aggregated rows"
+
+
 def bnlj_builds_are_scalar(df: DataFrame) -> list[str]:
     """Structural check on every BroadcastNestedLoopJoin in the
     physical plan: its broadcast side must be a SCALAR subtree — one

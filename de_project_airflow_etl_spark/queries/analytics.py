@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-from de_project_airflow_etl_spark.queries.util import tracked_persist
+from de_project_airflow_etl_spark.queries.util import sql_cents, tracked_persist
 from de_project_airflow_etl_spark.operators.curation import (
     NGRAM_N, _ngram_hashes, _SQL_NGRAMS,
 )
@@ -2261,7 +2261,7 @@ def word_cooccurrence_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # see registry._DRIVER_PRIORITY).
 # =====================================================================
 
-_O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
+_O_CENTS = sql_cents("o_totalprice")
 
 
 @query(

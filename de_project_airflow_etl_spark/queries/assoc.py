@@ -32,45 +32,23 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    """Wide exact integer -> double through the decimal string (the
-    established route when magnitudes can pass 2^53)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _dlit(x: float) -> str:
-    """A double literal rendered IDENTICALLY in both engines (repr()
-    round-trips exactly; a string cast is strtod — correctly rounded
-    everywhere)."""
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
+from de_project_airflow_etl_spark.queries.util import (
+    dlit, fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 def _daily_cents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The calendar-bounded daily revenue table (day, cents)."""
     return (load(spark, sf_dir, "events")
             .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{_CENTS} AS c")
+                        f"{sql_cents('value')} AS c")
             .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
 
 
 _SQL_DAILY = f"""
         d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         )"""
 
@@ -230,7 +208,7 @@ def _cc_col(k: int) -> str:
     oracle=f"""
         WITH base AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents,
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents,
                  CAST(COUNT(*) AS BIGINT) AS n_ev
           FROM events GROUP BY 1
         ),
@@ -268,7 +246,7 @@ def cross_correlation_revenue_count(spark: SparkSession,
                                     sf_dir: str) -> DataFrame:
     arr = (load(spark, sf_dir, "events")
            .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                       f"{_CENTS} AS c")
+                       f"{sql_cents('value')} AS c")
            .groupBy("day")
            .agg(F.sum("c").cast("long").alias("cents"),
                 F.count(F.lit(1)).cast("long").alias("n_ev"))
@@ -320,13 +298,13 @@ def cross_correlation_revenue_count(spark: SparkSession,
                CAST(CAST(CAST(n AS HUGEINT) * sd
                     - CAST(d AS HUGEINT) * sn AS VARCHAR) AS DOUBLE)
                  AS t_num,
-               {_wide("CAST(d AS HUGEINT) * (n - d)"
+               {wide("CAST(d AS HUGEINT) * (n - d)"
                       " * (CAST(n AS HUGEINT) * ssn"
                       " - CAST(sn AS HUGEINT) * sn)")}
                  / CAST(n AS DOUBLE) AS var_scaled,
                CAST(CAST(CAST(n AS HUGEINT) * sd
                     - CAST(d AS HUGEINT) * sn AS VARCHAR) AS DOUBLE)
-                 / SQRT({_wide("CAST(d AS HUGEINT) * (n - d)"
+                 / SQRT({wide("CAST(d AS HUGEINT) * (n - d)"
                                " * (CAST(n AS HUGEINT) * ssn"
                                " - CAST(sn AS HUGEINT) * sn)")}
                         / CAST(n AS DOUBLE)) AS z_stat
@@ -362,7 +340,7 @@ def cochran_armitage_dow_trend(spark: SparkSession,
         F.expr("CAST(SUM(s * s * n_i) AS BIGINT)").alias("ssn"))
     t_num = ("CAST(CAST(CAST(n AS DECIMAL(38,0)) * sd"
              " - CAST(d AS DECIMAL(38,0)) * sn AS STRING) AS DOUBLE)")
-    var_s = (_wide("CAST(d AS DECIMAL(38,0)) * (n - d)"
+    var_s = (wide("CAST(d AS DECIMAL(38,0)) * (n - d)"
                    " * (CAST(n AS DECIMAL(38,0)) * ssn"
                    " - CAST(sn AS DECIMAL(38,0)) * sn)")
              + " / CAST(n AS DOUBLE)")
@@ -397,7 +375,7 @@ def cochran_armitage_dow_trend(spark: SparkSession,
         )
         SELECT CAST(SUM(n_fwd + n_rev) AS BIGINT) AS n_transitions,
                CAST(COUNT(*) AS BIGINT) AS df,
-               {_fold_sql(
+               {fold_sql(
                    "list(CAST(n_fwd - n_rev AS DOUBLE)"
                    " * (n_fwd - n_rev) / (n_fwd + n_rev))")}
                  AS bowker_stat
@@ -436,7 +414,7 @@ def bowker_symmetry_event_transitions(spark: SparkSession,
             .agg(F.expr("CAST(SUM(n_fwd + n_rev) AS BIGINT)")
                   .alias("n_transitions"),
                  F.count(F.lit(1)).cast("long").alias("df"),
-                 F.expr(_fold_spark(
+                 F.expr(fold_spark(
                      "collect_list(CAST(n_fwd - n_rev AS DOUBLE)"
                      " * (n_fwd - n_rev) / (n_fwd + n_rev))"))
                   .alias("bowker_stat")))
@@ -506,7 +484,7 @@ def _oa_cond_spark(c: str) -> str:
     oracle=f"""
         WITH cell AS (
           SELECT dayofweek(ts) AS x,
-                 {_BAND_SQL.format(c=_CENTS)} AS y,
+                 {_BAND_SQL.format(c=sql_cents('value'))} AS y,
                  CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1, 2
         ),
@@ -564,7 +542,7 @@ def ordinal_association_dow_band(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     cell = (load(spark, sf_dir, "events")
             .selectExpr("dayofweek(ts) - 1 AS x",
-                        _BAND_SQL.format(c=_CENTS) + " AS y")
+                        _BAND_SQL.format(c=sql_cents("value")) + " AS y")
             .groupBy("x", "y")
             .agg(F.count(F.lit(1)).cast("long").alias("cnt")))
     arr = cell.agg(F.expr(
@@ -613,16 +591,16 @@ def ordinal_association_dow_band(spark: SparkSession,
         ),
         folds AS (
           SELECT CAST(SUM(a) AS BIGINT) AS sum_a,
-                 {_fold_sql(
+                 {fold_sql(
                      "list(CAST(a + b AS DOUBLE) * (a + c) / n)")}
                    AS sum_e,
-                 {_fold_sql(
+                 {fold_sql(
                      "list(CAST(a + b AS DOUBLE) * (c + n_d) / n"
                      " * (a + c) / n * (CAST(b + n_d AS DOUBLE)"
                      " / (n - 1)))")} AS sum_v,
-                 {_fold_sql("list(CAST(a AS DOUBLE) * n_d / n)")}
+                 {fold_sql("list(CAST(a AS DOUBLE) * n_d / n)")}
                    AS or_num,
-                 {_fold_sql("list(CAST(b AS DOUBLE) * c / n)")}
+                 {fold_sql("list(CAST(b AS DOUBLE) * c / n)")}
                    AS or_den
           FROM cell WHERE n > 1
         )
@@ -662,16 +640,16 @@ def cmh_weekend_purchase_weeks(spark: SparkSession,
                  F.count(F.lit(1)).cast("long").alias("n")))
     folds = (cell.filter("n > 1").agg(
         F.sum("a").cast("long").alias("sum_a"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(CAST(a + b AS DOUBLE) * (a + c) / n)"))
          .alias("sum_e"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(CAST(a + b AS DOUBLE) * (c + n_d) / n"
             " * (a + c) / n * (CAST(b + n_d AS DOUBLE) / (n - 1)))"))
          .alias("sum_v"),
-        F.expr(_fold_spark("collect_list(CAST(a AS DOUBLE) * n_d / n)"))
+        F.expr(fold_spark("collect_list(CAST(a AS DOUBLE) * n_d / n)"))
          .alias("or_num"),
-        F.expr(_fold_spark("collect_list(CAST(b AS DOUBLE) * c / n)"))
+        F.expr(fold_spark("collect_list(CAST(b AS DOUBLE) * c / n)"))
          .alias("or_den")))
     return folds.selectExpr(
         "sum_a", "sum_e", "sum_v",
@@ -720,7 +698,7 @@ _ERR_K = 10
         FROM per
     """.format(
         topk=_DIAG_TOPK,
-        fold_err=_fold_sql("list(err)")),
+        fold_err=fold_sql("list(err)")),
     doc="Expected Reciprocal Rank @10 over the SAME deterministic "
         "20-anchor retrieval panel as ndcg/mrr_retrieval_eval: the "
         "cascade metric (a relevant document at rank r only counts "
@@ -752,7 +730,7 @@ def err_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         " acc -> acc.e)").alias("err")))
     return per.agg(
         F.count(F.lit(1)).cast("long").alias("n_queries"),
-        F.expr(f"{_fold_spark('collect_list(err)')} / COUNT(*)")
+        F.expr(f"{fold_spark('collect_list(err)')} / COUNT(*)")
          .alias("mean_err"))
 
 
@@ -771,11 +749,11 @@ def err_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         terms AS (
           SELECT n - 7 AS n_pairs,
-                 {_fold_sql(
+                 {fold_sql(
                      "list_transform(generate_series(8, CAST(n AS INT)), "
                      "t -> 2.0 * abs(CAST(a[t] - a[t - 7] AS DOUBLE)) "
                      "/ (CAST(a[t] AS DOUBLE) + a[t - 7]))")} AS s_sm,
-                 {_fold_sql(
+                 {fold_sql(
                      "list_transform(generate_series(8, CAST(n AS INT)), "
                      "t -> abs(CAST(a[t] - a[t - 7] AS DOUBLE)) "
                      "/ CAST(a[t] AS DOUBLE))")} AS s_ma,
@@ -812,13 +790,13 @@ def smape_daily_forecasts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n"))
     terms = arr.selectExpr(
         "n - 7 AS n_pairs",
-        _fold_spark(
+        fold_spark(
             "transform(sequence(8, CAST(n AS INT)), "
             "t -> 2.0D * abs(CAST(element_at(a, t)"
             " - element_at(a, t - 7) AS DOUBLE)) "
             "/ (CAST(element_at(a, t) AS DOUBLE)"
             " + element_at(a, t - 7)))") + " AS s_sm",
-        _fold_spark(
+        fold_spark(
             "transform(sequence(8, CAST(n AS INT)), "
             "t -> abs(CAST(element_at(a, t)"
             " - element_at(a, t - 7) AS DOUBLE)) "
@@ -926,15 +904,15 @@ _BENFORD_P = [_math.log10(1.0 + 1.0 / d) for d in range(1, 10)]
 
 def _benford_chi2(n: str) -> str:
     return " + ".join(
-        f"(o_{d} - {n} * {_dlit(_BENFORD_P[d - 1])})"
-        f" * (o_{d} - {n} * {_dlit(_BENFORD_P[d - 1])})"
-        f" / ({n} * {_dlit(_BENFORD_P[d - 1])})"
+        f"(o_{d} - {n} * {dlit(_BENFORD_P[d - 1])})"
+        f" * (o_{d} - {n} * {dlit(_BENFORD_P[d - 1])})"
+        f" / ({n} * {dlit(_BENFORD_P[d - 1])})"
         for d in range(1, 10))
 
 
 def _benford_mad(n: str) -> str:
     return ("(" + " + ".join(
-        f"abs(o_{d} / {n} - {_dlit(_BENFORD_P[d - 1])})"
+        f"abs(o_{d} / {n} - {dlit(_BENFORD_P[d - 1])})"
         for d in range(1, 10)) + ") / 9")
 
 
@@ -942,9 +920,9 @@ def _benford_mad(n: str) -> str:
     "benford_first_digit_value",
     oracle=f"""
         WITH pos AS (
-          SELECT CAST(substring(CAST({_CENTS} AS VARCHAR), 1, 1)
+          SELECT CAST(substring(CAST({sql_cents('value')} AS VARCHAR), 1, 1)
                       AS BIGINT) AS fd
-          FROM events WHERE {_CENTS} > 0
+          FROM events WHERE {sql_cents('value')} > 0
         ),
         o AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n,
@@ -976,7 +954,7 @@ def _benford_mad(n: str) -> str:
 def benford_first_digit_value(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     o = (load(spark, sf_dir, "events")
-         .selectExpr(f"{_CENTS} AS cents")
+         .selectExpr(f"{sql_cents('value')} AS cents")
          .filter("cents > 0")
          .selectExpr("CAST(substring(CAST(cents AS STRING), 1, 1)"
                      " AS BIGINT) AS fd")

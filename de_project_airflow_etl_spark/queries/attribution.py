@@ -24,22 +24,12 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 # Spark dayofweek is 1=Sunday..7=Saturday, DuckDB's is 0=Sunday..6.
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _wide(col: str) -> str:
-    """Wide-int -> double through a decimal string (correctly rounded
-    on both engines even past 2^53)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _sql_wide(col: str) -> str:
-    return f"CAST(CAST({col} AS VARCHAR) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -186,7 +176,7 @@ _L30 = 2329089562800  # lcm(1..30); the event data spans <= 30 days
     oracle=f"""
         WITH daily AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS y
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS y
           FROM events WHERE event_type = 'purchase' GROUP BY 1
         ),
         idx AS (
@@ -214,7 +204,7 @@ _L30 = 2329089562800  # lcm(1..30); the event data spans <= 30 days
           SELECT d, MAX(mn) AS fit_scaled FROM inner_min GROUP BY 1
         )
         SELECT idx.day, idx.y AS daily_cents,
-               {_sql_wide("fit.fit_scaled")} / {_L30} AS fit_cents
+               {wide("fit.fit_scaled")} / {_L30} AS fit_cents
         FROM fit JOIN idx ON idx.i = fit.d
     """,
     doc="Isotonic (nondecreasing least-squares) regression of daily "
@@ -237,7 +227,7 @@ def isotonic_daily_revenue_fit(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .filter(F.col("event_type") == "purchase")
              .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                         f"{_CENTS} AS c")
+                         f"{sql_cents('value')} AS c")
              .groupBy("day")
              .agg(F.expr("CAST(SUM(c) AS BIGINT)").alias("y"))
              .localCheckpoint(eager=False))  # <=30 rows: all below
@@ -267,7 +257,7 @@ def isotonic_daily_revenue_fit(spark: SparkSession,
     fit = inner_min.groupBy("d").agg(F.max("mn").alias("fit_scaled"))
     return (fit.join(idx, fit.d == idx.i)
                .selectExpr("day", "y AS daily_cents",
-                           f"{_wide('fit_scaled')} / {_L30} AS fit_cents"))
+                           f"{wide('fit_scaled')} / {_L30} AS fit_cents"))
 
 
 # ---------------------------------------------------------------------
@@ -288,7 +278,7 @@ _CONF_H_SQL = ("CAST(('0x' || substring(md5('conf|' || "
     "split_conformal_value_interval",
     oracle=f"""
         WITH tagged AS (
-          SELECT event_type, {_CENTS} AS c,
+          SELECT event_type, {sql_cents('value')} AS c,
                  {_CONF_H_SQL} % 2 AS grp
           FROM events
         ),
@@ -329,7 +319,7 @@ _CONF_H_SQL = ("CAST(('0x' || substring(md5('conf|' || "
         SELECT tc.event_type,
                MIN(m.n_cal) AS n_cal,
                CAST(SUM(tc.cnt) AS BIGINT) AS n_test,
-               {_sql_wide("MIN(q.q_a)")} / MIN(m.n_cal) / 100
+               {wide("MIN(q.q_a)")} / MIN(m.n_cal) / 100
                  AS q_resid,
                CAST(SUM(CASE WHEN tc.a <= q.q_a THEN tc.cnt
                         ELSE 0 END) AS BIGINT) AS covered,
@@ -359,7 +349,7 @@ _CONF_H_SQL = ("CAST(('0x' || substring(md5('conf|' || "
 def split_conformal_value_interval(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     tagged = load(spark, sf_dir, "events").selectExpr(
-        "event_type", f"{_CENTS} AS c", f"{_CONF_H} % 2 AS grp")
+        "event_type", f"{sql_cents('value')} AS c", f"{_CONF_H} % 2 AS grp")
     model = (tagged.filter("grp = 0").groupBy("event_type")
              .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n_cal"),
                   F.expr("CAST(SUM(c) AS DECIMAL(38,0))").alias("sum_cal"))
@@ -392,7 +382,7 @@ def split_conformal_value_interval(spark: SparkSession,
             .groupBy("event_type")
             .agg(F.min("n_cal").alias("n_cal"),
                  F.expr("CAST(SUM(cnt) AS BIGINT)").alias("n_test"),
-                 F.expr(f"{_wide('MIN(q_a)')} / MIN(n_cal) / 100")
+                 F.expr(f"{wide('MIN(q_a)')} / MIN(n_cal) / 100")
                   .alias("q_resid"),
                  F.expr("CAST(SUM(CASE WHEN a <= q_a THEN cnt ELSE 0 "
                         "END) AS BIGINT)").alias("covered"),
@@ -417,7 +407,7 @@ _BH_ALPHA_NUM, _BH_ALPHA_DEN = 1, 4   # alpha = 0.25 on the pseudo-p
     oracle=f"""
         WITH b AS (
           SELECT event_type, {_WKND_SQL} AS wknd,
-                 CASE WHEN {_CENTS} >= {_HIGH_CENTS} THEN 1 ELSE 0 END
+                 CASE WHEN {sql_cents('value')} >= {_HIGH_CENTS} THEN 1 ELSE 0 END
                    AS hi
           FROM events
         ),
@@ -459,11 +449,11 @@ _BH_ALPHA_NUM, _BH_ALPHA_DEN = 1, 4   # alpha = 0.25 on the pseudo-p
         kstar AS (SELECT COALESCE(MAX(hit_r), 0) AS k FROM flags)
         SELECT event_type, r AS p_rank,
                CASE WHEN den = 0 THEN CAST(0 AS DOUBLE)
-                    ELSE {_sql_wide("num")} / {_sql_wide("den")} END
+                    ELSE {wide("num")} / {wide("den")} END
                  AS z2,
                CASE WHEN den = 0 THEN CAST(1 AS DOUBLE)
-                    ELSE {_sql_wide("den")}
-                           / {_sql_wide("(den + num)")} END
+                    ELSE {wide("den")}
+                           / {wide("(den + num)")} END
                  AS pseudo_p,
                CAST(CASE WHEN r <= kstar.k THEN 1 ELSE 0 END AS INT)
                  AS rejected
@@ -489,7 +479,7 @@ _BH_ALPHA_NUM, _BH_ALPHA_DEN = 1, 4   # alpha = 0.25 on the pseudo-p
         "ordering key (widest intermediate (den+num)*1e6) and ~4e7 "
         "for num itself / the BH threshold products — NOT the ~1e9 "
         "previously claimed. Beyond that, the 100TB path is a "
-        "gcd-reduced rational or a _wide()-double ordering key with "
+        "gcd-reduced rational or a wide()-double ordering key with "
         "exact-rational thresholds kept as-is.",
     tags=("statistics", "experimentation"),
 )
@@ -497,7 +487,7 @@ def bh_step_up_drift_panel(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     b = load(spark, sf_dir, "events").selectExpr(
         "event_type", f"{_WKND_SPARK} AS wknd",
-        f"CASE WHEN {_CENTS} >= {_HIGH_CENTS} THEN 1 ELSE 0 END AS hi")
+        f"CASE WHEN {sql_cents('value')} >= {_HIGH_CENTS} THEN 1 ELSE 0 END AS hi")
     cell = (b.groupBy("event_type")
             .agg(F.expr("CAST(SUM(CASE WHEN wknd = 1 THEN hi ELSE 0 "
                         "END) AS DECIMAL(38,0))").alias("x1"),
@@ -538,9 +528,9 @@ def bh_step_up_drift_panel(spark: SparkSession,
     return (flags.crossJoin(F.broadcast(kstar))
             .selectExpr("event_type", "r AS p_rank",
                         "CASE WHEN den = 0 THEN CAST(0 AS DOUBLE) ELSE "
-                        f"{_wide('num')} / {_wide('den')} END AS z2",
+                        f"{wide('num')} / {wide('den')} END AS z2",
                         "CASE WHEN den = 0 THEN CAST(1 AS DOUBLE) ELSE "
-                        f"{_wide('den')} / {_wide('(den + num)')} END"
+                        f"{wide('den')} / {wide('(den + num)')} END"
                         " AS pseudo_p",
                         "CAST(CASE WHEN r <= k THEN 1 ELSE 0 END "
                         "AS INT) AS rejected"))
@@ -767,7 +757,6 @@ def _harmonic_bfs(pairs: DataFrame, radius: int = _HC_RADIUS) -> DataFrame:
                   .alias("harmonic_x12")))
 
 
-
 @query(
     "harmonic_centrality_dup_graph",
     oracle=f"""
@@ -855,7 +844,6 @@ def harmonic_centrality_dup_graph(spark: SparkSession,
                           "CAST(harmonic_x12 AS DOUBLE) / 12 AS harmonic")
               .orderBy(F.desc("harmonic_x12"), "doc_id")
               .limit(_HC_TOP))
-
 
 
 # ---------------------------------------------------------------------

@@ -17,16 +17,14 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.queries.diagnostics import (
-    _CENTS, _fold_spark, _fold_sql, _wide,
-)
 from de_project_airflow_etl_spark.queries.mining import KM_CENSOR_DAYS
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 
 _SQL_DAILY = f"""
         d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         )"""
 
@@ -34,7 +32,7 @@ _SQL_DAILY = f"""
 def _spark_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (load(spark, sf_dir, "events")
             .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                        f"{_CENTS} AS c")
+                        f"{sql_cents('value')} AS c")
             .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
 
 
@@ -436,7 +434,7 @@ def token_gini_by_source(spark: SparkSession,
                " * (2 * m * c + m * (m + 1)))").alias("two_ranksum"))
     return agg.selectExpr(
         "source", "n_types", "n_tokens",
-        f"{_wide('two_ranksum')}"
+        f"{wide('two_ranksum')}"
         " / (CAST(n_types AS DOUBLE) * n_tokens)"
         " - (n_types + 1.0) / n_types AS gini")
 

@@ -34,14 +34,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    """Wide exact integer -> double through the decimal string (the
-    established route when magnitudes can pass 2^53)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 # Daily close/volume via deterministic (ts, event_id) row order — the
@@ -50,7 +45,7 @@ def _wide(col: str) -> str:
 _SQL_DAILY_OHLC = f"""
         e AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day, ts, event_id,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         r AS (
@@ -81,7 +76,7 @@ def _spark_daily_ohlc(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange on day)."""
     e = load(spark, sf_dir, "events").selectExpr(
         "CAST(CAST(ts AS DATE) AS STRING) AS day", "ts", "event_id",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     return e.groupBy("day").agg(
         F.expr("min_by(c, struct(ts, event_id))").alias("open_c"),
         F.max("c").alias("high_c"),
@@ -120,7 +115,7 @@ _TR = ("GREATEST(high_c - low_c, ABS(high_c - prev_close),"
             ROWS BETWEEN {ATR_W - 1} PRECEDING AND CURRENT ROW)
         )
         SELECT day, tr_cents,
-               {_wide('s')} / {ATR_W} / 100 AS atr
+               {wide('s')} / {ATR_W} / 100 AS atr
         FROM w WHERE n = {ATR_W}
     """,
     doc="Average True Range (Wilder's SMA variant, 14-day) over the "
@@ -153,7 +148,7 @@ def atr_daily_value_range(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("s"))
     return (w.filter(F.col("n") == ATR_W)
              .selectExpr("day", "tr_cents",
-                         f"{_wide('s')} / {ATR_W} / 100 AS atr"))
+                         f"{wide('s')} / {ATR_W} / 100 AS atr"))
 
 
 # ----------------------------- stochastic oscillator on daily closes
@@ -300,7 +295,7 @@ _MK_Z = ("CASE WHEN s_stat > 0 THEN (s_stat - 1.0) / SQRT(var_s) "
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         arr AS (
@@ -348,7 +343,7 @@ def mann_kendall_daily_trend(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents"))
          # the calendar-bounded daily table feeds BOTH the pair fold
          # and the tie aggregate; materialize so the fact table scans
@@ -390,7 +385,7 @@ def mann_kendall_daily_trend(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         arr AS (
@@ -412,13 +407,13 @@ def mann_kendall_daily_trend(spark: SparkSession,
         ),
         fit AS (
           SELECT n, a,
-                 (CAST(n AS DOUBLE) * {_wide('sxy')}
+                 (CAST(n AS DOUBLE) * {wide('sxy')}
                   - (CAST(n AS DOUBLE) * (n + 1.0) / 2.0)
-                    * {_wide('sy')})
+                    * {wide('sy')})
                  / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)
                     * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - 1.0)
                     / 12.0) AS bhat,
-                 {_wide('sy')} AS syd
+                 {wide('sy')} AS syd
           FROM sums
         ),
         res AS (
@@ -462,7 +457,7 @@ def durbin_watson_trend_residuals(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     arr = d.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
@@ -478,12 +473,12 @@ def durbin_watson_trend_residuals(spark: SparkSession,
         " CAST(0 AS DECIMAL(38,0)), (acc, v) -> acc + v) AS sy")
     fit = sums.selectExpr(
         "n", "a",
-        f"(CAST(n AS DOUBLE) * {_wide('sxy')}"
-        f" - (CAST(n AS DOUBLE) * (n + 1.0) / 2.0) * {_wide('sy')})"
+        f"(CAST(n AS DOUBLE) * {wide('sxy')}"
+        f" - (CAST(n AS DOUBLE) * (n + 1.0) / 2.0) * {wide('sy')})"
         f" / (CAST(n AS DOUBLE) * CAST(n AS DOUBLE)"
         f" * (CAST(n AS DOUBLE) * CAST(n AS DOUBLE) - 1.0) / 12.0)"
         f" AS bhat",
-        f"{_wide('sy')} AS syd")
+        f"{wide('sy')} AS syd")
     res = fit.selectExpr(
         "n", "bhat",
         "transform(sequence(1, CAST(n AS INT)),"
@@ -509,7 +504,7 @@ def durbin_watson_trend_residuals(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         arr AS (
@@ -520,21 +515,21 @@ def durbin_watson_trend_residuals(spark: SparkSession,
         ),
         mom AS (
           SELECT n,
-                 {_wide('s')} / n AS mu,
+                 {wide('s')} / n AS mu,
                  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                   list_transform(a, v -> (v - {_wide('s')} / n)
-                     * (v - {_wide('s')} / n))),
+                   list_transform(a, v -> (v - {wide('s')} / n)
+                     * (v - {wide('s')} / n))),
                    (acc, v) -> acc + v) / n AS m2,
                  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                   list_transform(a, v -> (v - {_wide('s')} / n)
-                     * (v - {_wide('s')} / n)
-                     * (v - {_wide('s')} / n))),
+                   list_transform(a, v -> (v - {wide('s')} / n)
+                     * (v - {wide('s')} / n)
+                     * (v - {wide('s')} / n))),
                    (acc, v) -> acc + v) / n AS m3,
                  list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-                   list_transform(a, v -> ((v - {_wide('s')} / n)
-                     * (v - {_wide('s')} / n))
-                     * ((v - {_wide('s')} / n)
-                     * (v - {_wide('s')} / n)))),
+                   list_transform(a, v -> ((v - {wide('s')} / n)
+                     * (v - {wide('s')} / n))
+                     * ((v - {wide('s')} / n)
+                     * (v - {wide('s')} / n)))),
                    (acc, v) -> acc + v) / n AS m4
           FROM arr
         )
@@ -568,14 +563,14 @@ def jarque_bera_daily_revenue(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     arr = d.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
                " x -> x.cents)").alias("a"),
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum(F.col("cents").cast("decimal(38,0)")).alias("s"))
-    mu = f"{_wide('s')} / n"
+    mu = f"{wide('s')} / n"
     mom = arr.selectExpr(
         "n",
         f"{mu} AS mu",
@@ -598,19 +593,9 @@ def jarque_bera_daily_revenue(spark: SparkSession,
 
 
 # ---------------------------------------------------------------------
-# Group B: distribution statistics. Shared fold helpers (the round-7b
-# deterministic-double-reduction idiom: both engines fold the SORTED
-# bounded term array sequentially from an explicit 0.0 seed).
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
+# Group B: distribution statistics. Bounded sums of per-group double
+# terms use the shared sorted folds (queries/util.py fold_spark /
+# fold_sql).
 
 
 # ----------------- Kruskal-Wallis rank test of value across types
@@ -631,7 +616,7 @@ _KW_TERM = ("CAST(CAST(r2 AS STRING) AS DOUBLE)"
     "kruskal_wallis_value_by_type",
     oracle=f"""
         WITH gv AS (
-          SELECT event_type AS g, {_CENTS} AS v,
+          SELECT event_type AS g, {sql_cents('value')} AS v,
                  CAST(COUNT(*) AS BIGINT) AS cnt_gv
           FROM events GROUP BY 1, 2
         ),
@@ -660,7 +645,7 @@ _KW_TERM = ("CAST(CAST(r2 AS STRING) AS DOUBLE)"
         ),
         folded AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n_groups,
-                 {_fold_sql(_KW_TERM)} AS f
+                 {fold_sql(f"list({_KW_TERM})")} AS f
           FROM rg
         )
         SELECT t.n AS n_events, folded.n_groups,
@@ -695,7 +680,7 @@ _KW_TERM = ("CAST(CAST(r2 AS STRING) AS DOUBLE)"
 def kruskal_wallis_value_by_type(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     gv = (load(spark, sf_dir, "events")
-          .selectExpr("event_type AS g", f"{_CENTS} AS v")
+          .selectExpr("event_type AS g", f"{sql_cents('value')} AS v")
           .groupBy("g", "v")
           .agg(F.count(F.lit(1)).cast("long").alias("cnt_gv"))
           # the (type, cents) table is bounded (5 types x bounded
@@ -721,7 +706,7 @@ def kruskal_wallis_value_by_type(spark: SparkSession,
                " - cnt_v)").alias("tie_num"))
     folded = rg.agg(
         F.count(F.lit(1)).cast("long").alias("n_groups"),
-        F.expr(_fold_spark(f"collect_list({_KW_TERM})")).alias("f"))
+        F.expr(fold_spark(f"collect_list({_KW_TERM})")).alias("f"))
     h = ("3.0 * f / (CAST(n AS DOUBLE) * (n + 1.0))"
          " - 3.0 * (n + 1.0)")
     tc = ("1.0 - CAST(CAST(tie_num AS STRING) AS DOUBLE)"
@@ -742,7 +727,7 @@ def kruskal_wallis_value_by_type(spark: SparkSession,
         WITH b AS (
           SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
                    AS wknd,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         med AS (
@@ -764,9 +749,9 @@ def kruskal_wallis_value_by_type(spark: SparkSession,
           SELECT CAST(SUM(n_g) AS BIGINT) AS n,
                  CAST(CAST(SUM(s_g) AS STRING) AS DOUBLE) AS s_tot,
                  CAST(CAST(SUM(q_g) AS STRING) AS DOUBLE) AS q_tot,
-                 {_fold_sql("CAST(CAST(s_g AS STRING) AS DOUBLE)"
+                 {fold_sql("list(CAST(CAST(s_g AS STRING) AS DOUBLE)"
                             " * CAST(CAST(s_g AS STRING) AS DOUBLE)"
-                            " / CAST(n_g AS DOUBLE)")} AS fold_sq,
+                            " / CAST(n_g AS DOUBLE))")} AS fold_sq,
                  MAX(CASE WHEN wknd = 1 THEN n_g END) AS n_we,
                  MAX(CASE WHEN wknd = 0 THEN n_g END) AS n_wd
           FROM g
@@ -801,7 +786,7 @@ def brown_forsythe_weekend_value(spark: SparkSession,
     b = load(spark, sf_dir, "events").selectExpr(
         "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
         " AS wknd",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     # group medians from the cumulated (wknd, cents)-cell table in 2x
     # integer units (med2 = v_lo + v_hi == 2*percentile(c, 0.5)
     # exactly) — percentile() over raw rows would sort the whole
@@ -838,7 +823,7 @@ def brown_forsythe_weekend_value(spark: SparkSession,
          .alias("s_tot"),
         F.expr("CAST(CAST(SUM(q_g) AS STRING) AS DOUBLE)")
          .alias("q_tot"),
-        F.expr(_fold_spark(f"collect_list({fold_term})"))
+        F.expr(fold_spark(f"collect_list({fold_term})"))
          .alias("fold_sq"),
         F.expr("MAX(CASE WHEN wknd = 1 THEN n_g END)").alias("n_we"),
         F.expr("MAX(CASE WHEN wknd = 0 THEN n_g END)").alias("n_wd"))
@@ -864,9 +849,9 @@ HELL_BINS = 10
 # is float division in both engines and DuckDB's CAST-to-BIGINT then
 # ROUNDS where Spark's truncates — measured as a whole bin shifting.
 _HBIN_SPARK = (f"LEAST(CAST({HELL_BINS - 1} AS BIGINT), "
-               f"CAST({_CENTS} DIV {HELL_BIN_C} AS BIGINT))")
+               f"CAST({sql_cents('value')} DIV {HELL_BIN_C} AS BIGINT))")
 _HBIN_SQL = (f"LEAST(CAST({HELL_BINS - 1} AS BIGINT), "
-             f"CAST({_CENTS} // {HELL_BIN_C} AS BIGINT))")
+             f"CAST({sql_cents('value')} // {HELL_BIN_C} AS BIGINT))")
 
 
 @query(
@@ -891,9 +876,9 @@ _HBIN_SQL = (f"LEAST(CAST({HELL_BINS - 1} AS BIGINT), "
           FROM per_bin
         ),
         f AS (
-          SELECT {_fold_sql(
-              "SQRT((CAST(n_wd AS DOUBLE) / (SELECT t_wd FROM tot))"
-              " * (CAST(n_we AS DOUBLE) / (SELECT t_we FROM tot)))")}
+          SELECT {fold_sql(
+              "list(SQRT((CAST(n_wd AS DOUBLE) / (SELECT t_wd FROM tot))"
+              " * (CAST(n_we AS DOUBLE) / (SELECT t_we FROM tot))))")}
             AS bc
           FROM per_bin
         )
@@ -931,7 +916,7 @@ def hellinger_weekend_value_drift(spark: SparkSession,
         F.sum("n_wd").cast("long").alias("t_wd"),
         F.count(F.lit(1)).cast("long").alias("n_bins"))
     witht = per_bin.crossJoin(F.broadcast(tot))
-    f = witht.agg(F.expr(_fold_spark(
+    f = witht.agg(F.expr(fold_spark(
         "collect_list(SQRT((CAST(n_wd AS DOUBLE) / t_wd)"
         " * (CAST(n_we AS DOUBLE) / t_we)))")).alias("bc"))
     return (f.crossJoin(F.broadcast(tot))
@@ -949,7 +934,7 @@ BRIER_SCALE = 50000  # score = cents / 50000 in [0, 1) (max value 490.02)
     "brier_calibration_purchase",
     oracle=f"""
         WITH e AS (
-          SELECT {_CENTS} AS c,
+          SELECT {sql_cents('value')} AS c,
                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                    AS y
           FROM events
@@ -982,7 +967,7 @@ BRIER_SCALE = 50000  # score = cents / 50000 in [0, 1) (max value 490.02)
 def brier_calibration_purchase(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_CENTS} AS c",
+        f"{sql_cents('value')} AS c",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y")
     return (e.groupBy(F.expr(
                 f"LEAST(CAST(9 AS BIGINT),"
@@ -1382,7 +1367,7 @@ def ndcg_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT CAST(COUNT(*) AS BIGINT) AS n_queries,
                CAST(SUM(CASE WHEN rr > 0 THEN 1 ELSE 0 END) AS BIGINT)
                  AS n_with_hit,
-               {_fold_sql("rr")} / COUNT(*) AS mrr
+               {fold_sql("list(rr)")} / COUNT(*) AS mrr
         FROM rr
     """,
     doc="Mean reciprocal rank @10 over the NDCG panel: where does the "
@@ -1407,5 +1392,5 @@ def mrr_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("n_queries"),
         F.expr("CAST(SUM(CASE WHEN rr > 0 THEN 1 ELSE 0 END) AS BIGINT)")
          .alias("n_with_hit"),
-        F.expr(f"{_fold_spark('collect_list(rr)')} / COUNT(*)")
+        F.expr(f"{fold_spark('collect_list(rr)')} / COUNT(*)")
          .alias("mrr"))

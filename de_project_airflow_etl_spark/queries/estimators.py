@@ -23,22 +23,14 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 # Spark dayofweek is 1=Sunday..7=Saturday, DuckDB's is 0=Sunday..6.
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _wide(col: str) -> str:
-    """Wide-int -> double through a decimal string (correctly rounded
-    on both engines even past 2^53)."""
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _sql_wide(col: str) -> str:
-    return f"CAST(CAST({col} AS VARCHAR) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -53,7 +45,7 @@ def _sql_wide(col: str) -> str:
     "wasserstein_weekend_value",
     oracle=f"""
         WITH b AS (
-          SELECT {_CENTS} AS c, {_WKND_SQL} AS wknd FROM events
+          SELECT {sql_cents('value')} AS c, {_WKND_SQL} AS wknd FROM events
         ),
         cells AS (
           SELECT c,
@@ -76,7 +68,7 @@ def _sql_wide(col: str) -> str:
         SELECT tot.n1 AS n_weekend, tot.n2 AS n_weekday,
                CAST(SUM(abs(f1 * tot.n2 - f2 * tot.n1)
                         * (c_next - c)) AS HUGEINT)::VARCHAR::DOUBLE
-                 / ({_sql_wide("tot.n1")} * tot.n2) / 100
+                 / ({wide("tot.n1")} * tot.n2) / 100
                  AS w1_dollars
         FROM cum, tot WHERE c_next IS NOT NULL
         GROUP BY tot.n1, tot.n2
@@ -98,7 +90,7 @@ def _sql_wide(col: str) -> str:
 def wasserstein_weekend_value(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     b = load(spark, sf_dir, "events").selectExpr(
-        f"{_CENTS} AS c", f"{_WKND_SPARK} AS wknd")
+        f"{sql_cents('value')} AS c", f"{_WKND_SPARK} AS wknd")
     cells = (b.groupBy("c")
               .agg(F.expr("CAST(SUM(wknd) AS BIGINT)").alias("c1"),
                    F.expr("CAST(SUM(1 - wknd) AS BIGINT)").alias("c2"))
@@ -120,7 +112,7 @@ def wasserstein_weekend_value(spark: SparkSession,
                    "CAST(SUM(abs(f1 * n2 - f2 * n1) * (c_next - c))"
                    " AS DECIMAL(38,0))").alias("num"))
                .selectExpr("n1 AS n_weekend", "n2 AS n_weekday",
-                           f"{_wide('num')} / ({_wide('n1')} * n2)"
+                           f"{wide('num')} / ({wide('n1')} * n2)"
                            " / 100 AS w1_dollars"))
 
 
@@ -163,7 +155,7 @@ def _sql_huber_iter(prev: str, out: str) -> str:
     "huber_mean_event_value",
     oracle=f"""
         WITH cells AS MATERIALIZED (
-          SELECT {_CENTS} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
+          SELECT {sql_cents('value')} AS c, CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1
         ),
         m0 AS MATERIALIZED (
@@ -178,8 +170,8 @@ def _sql_huber_iter(prev: str, out: str) -> str:
                        AS s
               FROM cells)
         SELECT n.n AS n_events,
-               {_sql_wide("n.s")} / n.n / 100 AS plain_mean,
-               {_sql_wide(f"m{_HUBER_ITERS}.mu")} / {_MC} / 100
+               {wide("n.s")} / n.n / 100 AS plain_mean,
+               {wide(f"m{_HUBER_ITERS}.mu")} / {_MC} / 100
                  AS huber_mean,
                CAST({_HUBER_K_CENTS} AS BIGINT) AS k_cents
         FROM n, m{_HUBER_ITERS}
@@ -203,7 +195,7 @@ def huber_mean_event_value(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     k_mc = _HUBER_K_CENTS * _MC
     cells = (load(spark, sf_dir, "events")
-             .selectExpr(f"{_CENTS} AS c")
+             .selectExpr(f"{sql_cents('value')} AS c")
              .groupBy("c")
              .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
              .localCheckpoint())  # bounded cells, reused every round
@@ -227,8 +219,8 @@ def huber_mean_event_value(spark: SparkSession,
                " AS DECIMAL(38,0))").alias("s"))
     return (n.crossJoin(F.broadcast(mu))
              .selectExpr("n AS n_events",
-                         f"{_wide('s')} / n / 100 AS plain_mean",
-                         f"{_wide('mu')} / {_MC} / 100 AS huber_mean",
+                         f"{wide('s')} / n / 100 AS plain_mean",
+                         f"{wide('mu')} / {_MC} / 100 AS huber_mean",
                          f"CAST({_HUBER_K_CENTS} AS BIGINT) AS k_cents"))
 
 
@@ -259,7 +251,7 @@ _OP_PATTERN = """
     oracle=f"""
         WITH daily AS (
           SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS y
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS y
           FROM events GROUP BY 1
         ),
         tri AS (
@@ -298,7 +290,7 @@ _OP_PATTERN = """
 def ordinal_pattern_census_daily(spark: SparkSession,
                                  sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
-             .selectExpr("CAST(ts AS DATE) AS day", f"{_CENTS} AS cc")
+             .selectExpr("CAST(ts AS DATE) AS day", f"{sql_cents('value')} AS cc")
              .groupBy("day")
              .agg(F.expr("CAST(SUM(cc) AS BIGINT)").alias("y"))
              .localCheckpoint())  # <=30 rows
@@ -383,11 +375,11 @@ _GS_BOUNDS = ("CAST(CASE look WHEN 1 THEN 20.808 WHEN 2 THEN 10.404 "
                CAST(n1 AS BIGINT) AS n_a, CAST(x1 AS BIGINT) AS x_a,
                CAST(n2 AS BIGINT) AS n_b, CAST(x2 AS BIGINT) AS x_b,
                CASE WHEN den = 0 THEN CAST(0 AS DOUBLE)
-                    ELSE {_sql_wide("num")} / {_sql_wide("den")} END
+                    ELSE {wide("num")} / {wide("den")} END
                  AS z2,
                {_GS_BOUNDS} AS z2_bound,
                CAST(CASE WHEN den > 0 AND
-                      {_sql_wide("num")} / {_sql_wide("den")}
+                      {wide("num")} / {wide("den")}
                         > {_GS_BOUNDS}
                     THEN 1 ELSE 0 END AS INT) AS crossed
         FROM z
@@ -447,9 +439,9 @@ def group_sequential_ab_readout(spark: SparkSession,
         "CAST(n1 AS BIGINT) AS n_a", "CAST(x1 AS BIGINT) AS x_a",
         "CAST(n2 AS BIGINT) AS n_b", "CAST(x2 AS BIGINT) AS x_b",
         "CASE WHEN den = 0 THEN CAST(0 AS DOUBLE) ELSE "
-        f"{_wide('num')} / {_wide('den')} END AS z2",
+        f"{wide('num')} / {wide('den')} END AS z2",
         f"{_GS_BOUNDS} AS z2_bound",
-        f"CAST(CASE WHEN den > 0 AND {_wide('num')} / {_wide('den')}"
+        f"CAST(CASE WHEN den > 0 AND {wide('num')} / {wide('den')}"
         f" > {_GS_BOUNDS} THEN 1 ELSE 0 END AS INT) AS crossed")
 
 
@@ -464,24 +456,14 @@ def group_sequential_ab_readout(spark: SparkSession,
 _JS_K = 5  # number of event types
 
 
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
-
-
-_JS_DEV_SQL = ("(" + _sql_wide("mom.s") + " / mom.n - "
-               + _sql_wide("g.ss") + " / g.nn)")
-_JS_D_BETWEEN_SQL = _fold_sql(
+_JS_DEV_SQL = ("(" + wide("mom.s") + " / mom.n - "
+               + wide("g.ss") + " / g.nn)")
+_JS_D_BETWEEN_SQL = fold_sql(
     "list(" + _JS_DEV_SQL + " * " + _JS_DEV_SQL + ")")
-_JS_SSW_SQL = _fold_sql(
-    "list(" + _sql_wide("mom.q") + " - " + _sql_wide("mom.s")
-    + " * " + _sql_wide("mom.s") + " / mom.n)")
-_JS_INVN_SQL = _fold_sql("list(CAST(1.0 AS DOUBLE) / mom.n)")
+_JS_SSW_SQL = fold_sql(
+    "list(" + wide("mom.q") + " - " + wide("mom.s")
+    + " * " + wide("mom.s") + " / mom.n)")
+_JS_INVN_SQL = fold_sql("list(CAST(1.0 AS DOUBLE) / mom.n)")
 
 
 @query(
@@ -490,8 +472,8 @@ _JS_INVN_SQL = _fold_sql("list(CAST(1.0 AS DOUBLE) / mom.n)")
         WITH mom AS (
           SELECT event_type,
                  CAST(COUNT(*) AS BIGINT) AS n,
-                 CAST(SUM({_CENTS}) AS HUGEINT) AS s,
-                 CAST(SUM(CAST({_CENTS} AS HUGEINT) * {_CENTS})
+                 CAST(SUM({sql_cents('value')}) AS HUGEINT) AS s,
+                 CAST(SUM(CAST({sql_cents('value')} AS HUGEINT) * {sql_cents('value')})
                       AS HUGEINT) AS q
           FROM events GROUP BY 1
         ),
@@ -516,10 +498,10 @@ _JS_INVN_SQL = _fold_sql("list(CAST(1.0 AS DOUBLE) / mom.n)")
           FROM terms, g
         )
         SELECT mom.event_type, mom.n AS n_events,
-               {_sql_wide("mom.s")} / mom.n / 100 AS raw_mean,
-               ({_sql_wide("g.ss")} / g.nn
-                + bf.b * ({_sql_wide("mom.s")} / mom.n
-                          - {_sql_wide("g.ss")} / g.nn)) / 100
+               {wide("mom.s")} / mom.n / 100 AS raw_mean,
+               ({wide("g.ss")} / g.nn
+                + bf.b * ({wide("mom.s")} / mom.n
+                          - {wide("g.ss")} / g.nn)) / 100
                  AS js_mean,
                bf.b AS shrink_b
         FROM mom, g, bf
@@ -542,7 +524,7 @@ _JS_INVN_SQL = _fold_sql("list(CAST(1.0 AS DOUBLE) / mom.n)")
 def james_stein_type_means(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     mom = (load(spark, sf_dir, "events")
-           .selectExpr("event_type", f"{_CENTS} AS c")
+           .selectExpr("event_type", f"{sql_cents('value')} AS c")
            .groupBy("event_type")
            .agg(F.expr("CAST(COUNT(*) AS BIGINT)").alias("n"),
                 F.expr("CAST(SUM(c) AS DECIMAL(38,0))").alias("s"),
@@ -556,14 +538,14 @@ def james_stein_type_means(spark: SparkSession,
     # scalar-aggregate root the BNLJ gate can prove bounded (nn rides
     # along as MIN over the constant column)
     terms = mg.agg(
-        F.expr(_fold_spark(
-            f"collect_list(({_wide('s')} / n - {_wide('ss')} / nn)"
-            f" * ({_wide('s')} / n - {_wide('ss')} / nn))"))
+        F.expr(fold_spark(
+            f"collect_list(({wide('s')} / n - {wide('ss')} / nn)"
+            f" * ({wide('s')} / n - {wide('ss')} / nn))"))
          .alias("d_between"),
-        F.expr(_fold_spark(
-            f"collect_list({_wide('q')}"
-            f" - {_wide('s')} * {_wide('s')} / n)")).alias("ssw"),
-        F.expr(_fold_spark("collect_list(CAST(1.0 AS DOUBLE) / n)"))
+        F.expr(fold_spark(
+            f"collect_list({wide('q')}"
+            f" - {wide('s')} * {wide('s')} / n)")).alias("ssw"),
+        F.expr(fold_spark("collect_list(CAST(1.0 AS DOUBLE) / n)"))
          .alias("inv_n"),
         F.expr("MIN(nn)").alias("nn"))
     bf = terms.selectExpr(
@@ -572,7 +554,7 @@ def james_stein_type_means(spark: SparkSession,
         " / NULLIF(d_between, CAST(0 AS DOUBLE))) AS b")
     return (mg.crossJoin(F.broadcast(bf))
               .selectExpr("event_type", "n AS n_events",
-                          f"{_wide('s')} / n / 100 AS raw_mean",
-                          f"({_wide('ss')} / nn + b * ({_wide('s')} / n"
-                          f" - {_wide('ss')} / nn)) / 100 AS js_mean",
+                          f"{wide('s')} / n / 100 AS raw_mean",
+                          f"({wide('ss')} / nn + b * ({wide('s')} / n"
+                          f" - {wide('ss')} / nn)) / 100 AS js_mean",
                           "b AS shrink_b"))

@@ -35,25 +35,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-# wide exact integer (DECIMAL(38,0)) -> double through the decimal
-# string, the established route when magnitudes can pass 2^53
-# (language_diversity_by_source precedent).
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
-
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 # ----------------------------------------- ROC-AUC of value vs purchase
@@ -63,15 +47,15 @@ _CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 # negative counts below each score, and combine
 #   AUC = sum_v pos_v * (neg_below_v + neg_v / 2) / (n_pos * n_neg).
 # Doubling the numerator keeps everything integral until one division.
-_AUC = (f"{_wide('num2')} / "
-        f"{_wide('CAST(2 * n_pos AS DECIMAL(38,0)) * n_neg')}")
+_AUC = (f"{wide('num2')} / "
+        f"{wide('CAST(2 * n_pos AS DECIMAL(38,0)) * n_neg')}")
 
 
 @query(
     "roc_auc_purchase_value",
     oracle=f"""
         WITH g AS (
-          SELECT {_CENTS} AS v,
+          SELECT {sql_cents('value')} AS v,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
                           THEN 1 ELSE 0 END) AS BIGINT) AS pos_v,
                  CAST(SUM(CASE WHEN event_type = 'purchase'
@@ -112,7 +96,7 @@ _AUC = (f"{_wide('num2')} / "
 )
 def roc_auc_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_CENTS} AS v",
+        f"{sql_cents('value')} AS v",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS is_pos")
     g = (e.groupBy("v")
           .agg(F.sum("is_pos").cast("long").alias("pos_v"),
@@ -138,11 +122,11 @@ def roc_auc_purchase_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 # are reported in dollars. Sums of cents and cents^2 both ride
 # DECIMAL(38,0) (the sum-of-squares passed 2^63 at sf0.1 once before;
 # tests/test_overflow.py covers the shared route).
-_MEAN_W = f"{_wide('s_w')} / n_w"
-_MEAN_D = f"{_wide('s_d')} / n_d"
-_VAR_W = (f"({_wide('q_w')} - {_wide('s_w')} * {_wide('s_w')} / n_w)"
+_MEAN_W = f"{wide('s_w')} / n_w"
+_MEAN_D = f"{wide('s_d')} / n_d"
+_VAR_W = (f"({wide('q_w')} - {wide('s_w')} * {wide('s_w')} / n_w)"
           f" / (n_w - 1)")
-_VAR_D = (f"({_wide('q_d')} - {_wide('s_d')} * {_wide('s_d')} / n_d)"
+_VAR_D = (f"({wide('q_d')} - {wide('s_d')} * {wide('s_d')} / n_d)"
           f" / (n_d - 1)")
 _SE2 = "(var_w / n_w + var_d / n_d)"
 _T = f"(mean_w_c - mean_d_c) / SQRT({_SE2})"
@@ -157,7 +141,7 @@ _WELCH_DF = (f"({_SE2} * {_SE2}) / "
         WITH b AS (
           SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
                    AS wknd,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         a AS (
@@ -209,7 +193,7 @@ def welch_t_test_weekend_value(spark: SparkSession,
     b = load(spark, sf_dir, "events").selectExpr(
         "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
         " AS wknd",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     a = b.agg(
         F.expr("CAST(SUM(wknd) AS BIGINT)").alias("n_w"),
         F.expr("SUM(CASE WHEN wknd = 1 THEN CAST(c AS DECIMAL(38,0))"
@@ -254,8 +238,8 @@ _ANOVA_FINAL = """
 
 def _anova_final(dialect_fold_done: str) -> str:
     return _ANOVA_FINAL.format(
-        S2N=f"{_wide('s_tot')} * {_wide('s_tot')} / n_total",
-        Q=_wide("q_tot")) + dialect_fold_done
+        S2N=f"{wide('s_tot')} * {wide('s_tot')} / n_total",
+        Q=wide("q_tot")) + dialect_fold_done
 
 
 @query(
@@ -264,21 +248,21 @@ def _anova_final(dialect_fold_done: str) -> str:
         WITH g AS (
           SELECT event_type,
                  CAST(COUNT(*) AS BIGINT) AS n_g,
-                 SUM(CAST({_CENTS} AS DECIMAL(38,0))) AS s_g,
-                 SUM(CAST({_CENTS} AS DECIMAL(38,0)) * {_CENTS})
+                 SUM(CAST({sql_cents('value')} AS DECIMAL(38,0))) AS s_g,
+                 SUM(CAST({sql_cents('value')} AS DECIMAL(38,0)) * {sql_cents('value')})
                    AS q_g
           FROM events GROUP BY event_type
         ),
         p AS (
           SELECT n_g, s_g, q_g,
-                 {_wide('s_g')} * {_wide('s_g')} / n_g AS a_g
+                 {wide('s_g')} * {wide('s_g')} / n_g AS a_g
           FROM g
         ),
         t AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS k_groups,
                  CAST(SUM(n_g) AS BIGINT) AS n_total,
                  SUM(s_g) AS s_tot, SUM(q_g) AS q_tot,
-                 {_fold_sql('a_g')} AS a_sum
+                 {fold_sql('list(a_g)')} AS a_sum
           FROM p
         )
         {_anova_final("FROM t")}
@@ -300,12 +284,13 @@ def _anova_final(dialect_fold_done: str) -> str:
 def anova_event_type_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = load(spark, sf_dir, "events").groupBy("event_type").agg(
         F.count(F.lit(1)).alias("n_g"),
-        F.expr(f"SUM(CAST({_CENTS} AS DECIMAL(38,0)))").alias("s_g"),
-        F.expr(f"SUM(CAST({_CENTS} AS DECIMAL(38,0)) * {_CENTS})")
+        F.expr(f"SUM(CAST({sql_cents('value')} AS DECIMAL(38,0)))").alias("s_g"),
+        F.expr(f"SUM(CAST({sql_cents('value')} AS DECIMAL(38,0))"
+               f" * {sql_cents('value')})")
          .alias("q_g"))
     p = g.selectExpr(
         "n_g", "s_g", "q_g",
-        f"{_wide('s_g')} * {_wide('s_g')} / n_g AS a_g")
+        f"{wide('s_g')} * {wide('s_g')} / n_g AS a_g")
     t = p.agg(
         F.count(F.lit(1)).cast("long").alias("k_groups"),
         F.sum("n_g").cast("long").alias("n_total"),
@@ -314,7 +299,7 @@ def anova_event_type_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list("a_g").alias("a_list"))
     folded = t.selectExpr(
         "k_groups", "n_total", "s_tot", "q_tot",
-        f"{_fold_spark('a_list')} AS a_sum")
+        f"{fold_spark('a_list')} AS a_sum")
     folded.createOrReplaceTempView("anova_folded")
     return spark.sql(_anova_final("FROM anova_folded"))
 
@@ -350,7 +335,7 @@ _V_FINAL = ("SQRT(chi2 / (CAST(n_total AS DOUBLE)"
           SELECT CAST(MAX(gt) AS BIGINT) AS n_total,
                  CAST(MAX(n_rows) AS BIGINT) AS n_rows,
                  CAST(MAX(n_cols) AS BIGINT) AS n_cols,
-                 {_fold_sql(_CELL_CONTRIB)} AS chi2
+                 {fold_sql(f"list({_CELL_CONTRIB})")} AS chi2
           FROM m
         )
         SELECT n_total, n_rows, n_cols,
@@ -396,7 +381,7 @@ def cramers_v_event_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.collect_list(F.expr(_CELL_CONTRIB)).alias("contribs"))
     return (t.selectExpr(
                 "n_total", "n_rows", "n_cols",
-                f"{_fold_spark('contribs')} AS chi2")
+                f"{fold_spark('contribs')} AS chi2")
              .selectExpr(
                 "n_total", "n_rows", "n_cols",
                 "CAST((n_rows - 1) * (n_cols - 1) AS BIGINT) AS dof",
@@ -713,11 +698,11 @@ def map_retrieval_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 BOLL_W = 20   # SMA window (trading-days convention)
 
-_BOLL_MEAN = f"{_wide('s')} / n / 100"
+_BOLL_MEAN = f"{wide('s')} / n / 100"
 # rolling stddev from exact window moments, in dollars; the window
 # sum of per-day squared cents rides DECIMAL(38,0) (a single day can
 # carry ~1e13 cents at 100 TB; its square passes 2^63).
-_BOLL_SD = (f"SQRT(({_wide('q')} - {_wide('s')} * {_wide('s')} / n)"
+_BOLL_SD = (f"SQRT(({wide('q')} - {wide('s')} * {wide('s')} / n)"
             f" / (n - 1)) / 100")
 
 
@@ -726,7 +711,7 @@ _BOLL_SD = (f"SQRT(({_wide('q')} - {_wide('s')} * {_wide('s')} / n)"
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         w AS (
@@ -770,7 +755,7 @@ def bollinger_daily_revenue(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     win = (Window.orderBy("day")
                  .rowsBetween(-(BOLL_W - 1), Window.currentRow))
@@ -800,7 +785,7 @@ def bollinger_daily_revenue(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         j AS (
@@ -819,10 +804,10 @@ def bollinger_daily_revenue(spark: SparkSession,
           FROM j
         )
         SELECT n_eval_days,
-               {_wide('ae_seasonal')} / n_eval_days / 100
+               {wide('ae_seasonal')} / n_eval_days / 100
                  AS mae_seasonal,
-               {_wide('ae_naive1')} / n_eval_days / 100 AS mae_naive1,
-               {_wide('ae_seasonal')} / {_wide('ae_naive1')} AS mase
+               {wide('ae_naive1')} / n_eval_days / 100 AS mae_naive1,
+               {wide('ae_seasonal')} / {wide('ae_naive1')} AS mase
         FROM a
     """,
     doc="Mean absolute scaled error of the weekly seasonal-naive "
@@ -845,7 +830,7 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # calendar-bounded daily table so the fact-table aggregate runs
     # once, not per branch.
     d = (load(spark, sf_dir, "events")
-         .selectExpr("CAST(ts AS DATE) AS day", f"{_CENTS} AS c")
+         .selectExpr("CAST(ts AS DATE) AS day", f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents"))
          .localCheckpoint())
     t = d.alias("t")
@@ -862,9 +847,9 @@ def seasonal_naive_mase(spark: SparkSession, sf_dir: str) -> DataFrame:
          .alias("ae_naive1"))
     return a.selectExpr(
         "n_eval_days",
-        f"{_wide('ae_seasonal')} / n_eval_days / 100 AS mae_seasonal",
-        f"{_wide('ae_naive1')} / n_eval_days / 100 AS mae_naive1",
-        f"{_wide('ae_seasonal')} / {_wide('ae_naive1')} AS mase")
+        f"{wide('ae_seasonal')} / n_eval_days / 100 AS mae_seasonal",
+        f"{wide('ae_naive1')} / n_eval_days / 100 AS mae_naive1",
+        f"{wide('ae_seasonal')} / {wide('ae_naive1')} AS mase")
 
 
 # --------------------- unigram LM inverse-probability per source
@@ -899,7 +884,7 @@ _INV_SCALE = 1_000_000_000_000  # 1e12 fixed-point for 1/(c_w + 1)
         )
         SELECT s.source, s.n_tokens, g.n_corpus, g.v_size,
                CAST(g.n_corpus + g.v_size AS DOUBLE)
-                 * ({_wide('s.inv_fp')} / {float(_INV_SCALE)})
+                 * ({wide('s.inv_fp')} / {float(_INV_SCALE)})
                  / s.n_tokens AS mean_inv_prob
         FROM s CROSS JOIN g
     """,
@@ -940,7 +925,7 @@ def unigram_inverse_prob_by_source(spark: SparkSession,
              .selectExpr(
                  "source", "n_tokens", "n_corpus", "v_size",
                  f"CAST(n_corpus + v_size AS DOUBLE)"
-                 f" * ({_wide('inv_fp')} / {float(_INV_SCALE)})"
+                 f" * ({wide('inv_fp')} / {float(_INV_SCALE)})"
                  f" / n_tokens AS mean_inv_prob"))
 
 
@@ -954,8 +939,8 @@ def unigram_inverse_prob_by_source(spark: SparkSession,
 #   absent : sum of n_w over words the source never emits
 #          = N - sum_{w in vocab_s} n_w
 _TV_DEN = "CAST(n_tokens AS DECIMAL(38,0)) * n_corpus"
-_TV = (f"({_wide('tv_num')} / ({_wide(_TV_DEN)})"
-       f" + (CAST(n_corpus AS DOUBLE) - {_wide('cov_mass')})"
+_TV = (f"({wide('tv_num')} / ({wide(_TV_DEN)})"
+       f" + (CAST(n_corpus AS DOUBLE) - {wide('cov_mass')})"
        f" / n_corpus) / 2")
 
 
@@ -994,7 +979,7 @@ _TV = (f"({_wide('tv_num')} / ({_wide(_TV_DEN)})"
           GROUP BY sw.source
         )
         SELECT st.source, st.n_tokens, st.n_distinct, g.n_corpus,
-               {_wide('d.cov_mass')} / g.n_corpus AS corpus_coverage,
+               {wide('d.cov_mass')} / g.n_corpus AS corpus_coverage,
                {_TV.replace('n_tokens', 'st.n_tokens')
                    .replace('n_corpus', 'g.n_corpus')
                    .replace('tv_num', 'd.tv_num')
@@ -1048,7 +1033,7 @@ def source_unigram_tv_distance(spark: SparkSession,
              .crossJoin(F.broadcast(g))
              .selectExpr(
                  "source", "n_tokens", "n_distinct", "n_corpus",
-                 f"{_wide('cov_mass')} / n_corpus AS corpus_coverage",
+                 f"{wide('cov_mass')} / n_corpus AS corpus_coverage",
                  f"{_TV} AS tv_distance"))
 
 
@@ -1063,7 +1048,7 @@ def source_unigram_tv_distance(spark: SparkSession,
                     THEN 'weekend' ELSE 'weekday' END AS VARCHAR)
                  AS day_kind,
                CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM({_CENTS}) AS DOUBLE) / 100 AS revenue
+               CAST(SUM({sql_cents('value')}) AS DOUBLE) / 100 AS revenue
         FROM events
         GROUP BY ALL
         ORDER BY ALL
@@ -1090,7 +1075,7 @@ def group_by_all_weekday_mix(spark: SparkSession,
                     THEN 'weekend' ELSE 'weekday' END AS STRING)
                  AS day_kind,
                CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM({_CENTS}) AS DOUBLE) / 100 AS revenue
+               CAST(SUM({sql_cents('value')}) AS DOUBLE) / 100 AS revenue
         FROM gba_events
         GROUP BY ALL
         ORDER BY ALL
@@ -1120,7 +1105,7 @@ def _attr_credit(div_op: str) -> str:
     oracle=f"""
         WITH p AS (
           SELECT event_id AS pid, user_id, ts AS pts,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events WHERE event_type = 'purchase'
         ),
         touch AS (
@@ -1138,7 +1123,7 @@ def _attr_credit(div_op: str) -> str:
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_touches,
                CAST(COUNT(DISTINCT pid) AS BIGINT) AS n_conversions,
-               {_wide(f"SUM(CAST({_attr_credit('//')} "
+               {wide(f"SUM(CAST({_attr_credit('//')} "
                       f"AS DECIMAL(38,0)))")}
                  / {float(_ATTR_SCALE * 100)} AS attributed_revenue
         FROM touch GROUP BY event_type
@@ -1163,7 +1148,7 @@ def position_attribution_revenue(spark: SparkSession,
     e = load(spark, sf_dir, "events")
     p = (e.filter(F.col("event_type") == "purchase")
           .selectExpr("event_id AS pid", "user_id AS puid",
-                      "ts AS pts", f"{_CENTS} AS c"))
+                      "ts AS pts", f"{sql_cents('value')} AS c"))
     joined = p.join(
         e,
         (F.col("user_id") == F.col("puid"))
@@ -1184,7 +1169,7 @@ def position_attribution_revenue(spark: SparkSession,
                       F.sum(F.expr(f"CAST({_attr_credit('DIV')}"
                                    f" AS DECIMAL(38,0))")).alias("fp"))
                  .selectExpr("event_type", "n_touches", "n_conversions",
-                             f"{_wide('fp')}"
+                             f"{wide('fp')}"
                              f" / {float(_ATTR_SCALE * 100)}"
                              f" AS attributed_revenue"))
 
@@ -1198,7 +1183,7 @@ def position_attribution_revenue(spark: SparkSession,
 # decimal, so each MOMENT routes to double first (string route) and
 # the centered algebra runs in shared double fragments — identical
 # operands, identical order, bit-identical results.
-_M = {m: _wide(m) for m in
+_M = {m: wide(m) for m in
       ("n_", "sx", "sz", "sy", "sxx", "sxz", "szz", "sxy", "szy",
        "syy")}
 _C = {
@@ -1284,12 +1269,12 @@ _KAPPA_FINAL = f"""
         SELECT n_docs, n11 AS n_both, n10 AS n_only_a,
                n01 AS n_only_b, n00 AS n_neither,
                CAST(n11 + n00 AS DOUBLE) / n_docs AS po,
-               {_wide(_KAPPA_X)}
-                 / {_wide('CAST(n_docs AS DECIMAL(38,0)) * n_docs')}
+               {wide(_KAPPA_X)}
+                 / {wide('CAST(n_docs AS DECIMAL(38,0)) * n_docs')}
                  AS pe,
-               {_wide(f'(CAST(n_docs AS DECIMAL(38,0)) * (n11 + n00)'
+               {wide(f'(CAST(n_docs AS DECIMAL(38,0)) * (n11 + n00)'
                       f' - {_KAPPA_X})')}
-                 / {_wide(f'(CAST(n_docs AS DECIMAL(38,0)) * n_docs'
+                 / {wide(f'(CAST(n_docs AS DECIMAL(38,0)) * n_docs'
                           f' - {_KAPPA_X})')}
                  AS kappa
 """
@@ -1721,7 +1706,7 @@ def mcnemar_test_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         c AS (
@@ -1738,10 +1723,10 @@ def mcnemar_test_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM c
         )
         SELECT CAST(COUNT(*) AS BIGINT) AS n_days,
-               {_wide('MAX(cum)')} / 100 AS final_cum_revenue,
-               {_wide('MAX(peak - cum)')} / 100 AS max_drawdown,
+               {wide('MAX(cum)')} / 100 AS final_cum_revenue,
+               {wide('MAX(peak - cum)')} / 100 AS max_drawdown,
                MAX(CASE WHEN peak > 0
-                   THEN {_wide('(peak - cum)')} / {_wide('peak')}
+                   THEN {wide('(peak - cum)')} / {wide('peak')}
                    ELSE 0.0 END) AS max_drawdown_frac
         FROM p
     """,
@@ -1761,7 +1746,7 @@ def max_drawdown_daily_revenue(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     wc = Window.orderBy("day").rowsBetween(Window.unboundedPreceding,
                                            Window.currentRow)
@@ -1770,10 +1755,10 @@ def max_drawdown_daily_revenue(spark: SparkSession,
           .select("day", "cum", F.max("cum").over(wc).alias("peak")))
     return p.agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
-        F.expr(f"{_wide('MAX(cum)')} / 100").alias("final_cum_revenue"),
-        F.expr(f"{_wide('MAX(peak - cum)')} / 100").alias("max_drawdown"),
+        F.expr(f"{wide('MAX(cum)')} / 100").alias("final_cum_revenue"),
+        F.expr(f"{wide('MAX(peak - cum)')} / 100").alias("max_drawdown"),
         F.expr(f"MAX(CASE WHEN peak > 0"
-               f" THEN {_wide('(peak - cum)')} / {_wide('peak')}"
+               f" THEN {wide('(peak - cum)')} / {wide('peak')}"
                f" ELSE 0.0 END)").alias("max_drawdown_frac"))
 
 

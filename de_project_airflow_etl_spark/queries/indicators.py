@@ -28,10 +28,12 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.queries.diagnostics import (
-    _CENTS, _SQL_DAILY_OHLC, _fold_spark, _fold_sql, _spark_daily_ohlc,
-    _wide,
+    _SQL_DAILY_OHLC, _spark_daily_ohlc,
 )
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
 # ---------------------------------------------------------------------
 # Group A: technical indicators over the shared daily OHLC bars.
@@ -175,8 +177,8 @@ def aroon_daily_value(spark: SparkSession, sf_dir: str) -> DataFrame:
 MFI_W = 14
 
 _MFI = ("CASE WHEN pos_f + neg_f = 0 THEN CAST(NULL AS DOUBLE)"
-        f" ELSE 100.0 * {_wide('pos_f')}"
-        f" / ({_wide('pos_f')} + {_wide('neg_f')}) END")
+        f" ELSE 100.0 * {wide('pos_f')}"
+        f" / ({wide('pos_f')} + {wide('neg_f')}) END")
 
 
 @query(
@@ -333,8 +335,8 @@ def donchian_channel_daily(spark: SparkSession,
 CMO_W = 14
 
 _CMO = ("CASE WHEN su + sd = 0 THEN CAST(NULL AS DOUBLE)"
-        f" ELSE 100.0 * ({_wide('su')} - {_wide('sd')})"
-        f" / ({_wide('su')} + {_wide('sd')}) END")
+        f" ELSE 100.0 * ({wide('su')} - {wide('sd')})"
+        f" / ({wide('su')} + {wide('sd')}) END")
 
 
 @query(
@@ -430,7 +432,7 @@ _AD_POS = ("CASE WHEN high_c > low_c THEN"
           FROM m
         )
         SELECT day, mfv_ppm,
-               {_wide('ad')} / 1000000 AS ad_line
+               {wide('ad')} / 1000000 AS ad_line
         FROM cumline
     """,
     doc="Accumulation/Distribution line over the daily bars: each "
@@ -462,7 +464,7 @@ def accum_dist_daily_flow(spark: SparkSession,
         F.sum(F.col("mfv_ppm").cast("decimal(38,0)")).over(runw)
          .alias("ad"))
     return r.selectExpr("day", "mfv_ppm",
-                        f"{_wide('ad')} / 1000000 AS ad_line")
+                        f"{wide('ad')} / 1000000 AS ad_line")
 
 
 # ---------------------------------------------------------------------
@@ -496,8 +498,8 @@ def _wsr_cols(div: str) -> list[str]:
     oracle=f"""
         WITH e AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CASE WHEN hour(ts) >= 12 THEN {_CENTS}
-                      ELSE -({_CENTS}) END AS signed_c
+                 CASE WHEN hour(ts) >= 12 THEN {sql_cents('value')}
+                      ELSE -({sql_cents('value')}) END AS signed_c
           FROM events
         ),
         d AS (
@@ -549,8 +551,8 @@ def wilcoxon_signed_rank_ampm(spark: SparkSession,
                               sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
         "CAST(CAST(ts AS DATE) AS STRING) AS day",
-        f"CASE WHEN hour(ts) >= 12 THEN {_CENTS}"
-        f" ELSE -({_CENTS}) END AS signed_c")
+        f"CASE WHEN hour(ts) >= 12 THEN {sql_cents('value')}"
+        f" ELSE -({sql_cents('value')}) END AS signed_c")
     d = (e.groupBy("day").agg(F.sum("signed_c").cast("long")
                                .alias("diff"))
           .filter(F.col("diff") != 0))
@@ -581,7 +583,7 @@ def wilcoxon_signed_rank_ampm(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         l AS (
@@ -619,7 +621,7 @@ def sign_test_daily_updown(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
          .selectExpr("CAST(CAST(ts AS DATE) AS STRING) AS day",
-                     f"{_CENTS} AS c")
+                     f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     l = d.select(
         (F.col("cents") - F.lag("cents").over(Window.orderBy("day")))
@@ -656,7 +658,7 @@ _MOOD_TERM = (
     "mood_median_test_event_type",
     oracle=f"""
         WITH b AS (
-          SELECT event_type AS g, {_CENTS} AS c FROM events
+          SELECT event_type AS g, {sql_cents('value')} AS c FROM events
         ),
         med AS (
           SELECT quantile_cont(c, 0.5) AS med FROM b
@@ -674,9 +676,9 @@ _MOOD_TERM = (
           FROM gcnt
         ),
         terms AS (
-          SELECT {_fold_sql(
-              _MOOD_TERM.replace('ta', 'CAST((SELECT total_above FROM tot) AS DOUBLE)')
-                        .replace('nn', 'CAST((SELECT n FROM tot) AS DOUBLE)'))}
+          SELECT {fold_sql("list(" + _MOOD_TERM
+              .replace('ta', 'CAST((SELECT total_above FROM tot) AS DOUBLE)')
+              .replace('nn', 'CAST((SELECT n FROM tot) AS DOUBLE)') + ")")}
             AS chi2
           FROM gcnt
         )
@@ -702,7 +704,7 @@ _MOOD_TERM = (
 def mood_median_test_event_type(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     b = load(spark, sf_dir, "events").selectExpr(
-        "event_type AS g", f"{_CENTS} AS c")
+        "event_type AS g", f"{sql_cents('value')} AS c")
     # grand median from the cumulated distinct-cents cell table in 2x
     # integer units (med2 == 2*percentile(c, 0.5) exactly) — the raw-
     # row percentile would sort the whole corpus in ONE task at 100 TB
@@ -734,7 +736,7 @@ def mood_median_test_event_type(spark: SparkSession,
             .replace("ta", "CAST(total_above AS DOUBLE)")
             .replace("nn", "CAST(n AS DOUBLE)"))
     terms = (gcnt.crossJoin(F.broadcast(tot))
-                 .agg(F.expr(_fold_spark(f"collect_list({term})"))
+                 .agg(F.expr(fold_spark(f"collect_list({term})"))
                        .alias("chi2"),
                       F.max("n").alias("n"),
                       F.max("total_above").alias("total_above"),
@@ -760,7 +762,7 @@ FR_K = 7  # treatments: the seven weekdays
                    // 7 AS blk,
                  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                    % 7 AS dow,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1, 2
         ),
         full_blocks AS (
@@ -784,7 +786,7 @@ FR_K = 7  # treatments: the seven weekdays
         )
         SELECT b AS n_blocks, CAST({FR_K} AS BIGINT) AS k_treatments,
                CAST({FR_K - 1} AS BIGINT) AS df,
-               3.0 * {_wide('ss')}
+               3.0 * {wide('ss')}
                  / (CAST(b AS DOUBLE) * {FR_K} * {FR_K + 1})
                  - 3.0 * b * {FR_K + 1} AS chi2_f
         FROM agg
@@ -815,7 +817,7 @@ def friedman_dow_value_ranks(spark: SparkSession,
              " AS blk",
              "datediff(CAST(ts AS DATE), DATE'1970-01-01') % 7"
              " AS dow",
-             f"{_CENTS} AS c")
+             f"{sql_cents('value')} AS c")
          .groupBy("blk", "dow")
          .agg(F.sum("c").cast("long").alias("cents"))
          # the (week, dow) table feeds the completeness filter AND
@@ -838,7 +840,7 @@ def friedman_dow_value_ranks(spark: SparkSession,
     return agg.selectExpr(
         "b AS n_blocks", f"CAST({FR_K} AS BIGINT) AS k_treatments",
         f"CAST({FR_K - 1} AS BIGINT) AS df",
-        f"3.0 * {_wide('ss')}"
+        f"3.0 * {wide('ss')}"
         f" / (CAST(b AS DOUBLE) * {FR_K} * {FR_K + 1})"
         f" - 3.0 * b * {FR_K + 1} AS chi2_f")
 
@@ -850,7 +852,7 @@ def friedman_dow_value_ranks(spark: SparkSession,
     "jonckheere_terpstra_value_by_type",
     oracle=f"""
         WITH gv AS (
-          SELECT event_type AS g, {_CENTS} AS v,
+          SELECT event_type AS g, {sql_cents('value')} AS v,
                  CAST(COUNT(*) AS BIGINT) AS cnt
           FROM events GROUP BY 1, 2
         ),
@@ -918,7 +920,7 @@ def friedman_dow_value_ranks(spark: SparkSession,
 def jonckheere_terpstra_value_by_type(spark: SparkSession,
                                       sf_dir: str) -> DataFrame:
     gv = (load(spark, sf_dir, "events")
-          .selectExpr("event_type AS g", f"{_CENTS} AS v")
+          .selectExpr("event_type AS g", f"{sql_cents('value')} AS v")
           .groupBy("g", "v")
           .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
           # bounded (type, cents) table feeds the grid, the h-side,
@@ -1086,7 +1088,7 @@ def per_class_f1_length_rules(spark: SparkSession,
         WITH b AS (
           SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
                    AS wknd,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         gv AS (
@@ -1111,13 +1113,13 @@ def per_class_f1_length_rules(spark: SparkSession,
           FROM gv
         ),
         folded AS (
-          SELECT {_fold_sql(
-              "cnt_v * CAST(CAST(a_le * CAST((SELECT m FROM tot)"
+          SELECT {fold_sql(
+              "list(cnt_v * CAST(CAST(a_le * CAST((SELECT m FROM tot)"
               " AS DECIMAL(38,0)) - b_le * CAST((SELECT n FROM tot)"
               " AS DECIMAL(38,0)) AS STRING) AS DOUBLE)"
               " * CAST(CAST(a_le * CAST((SELECT m FROM tot)"
               " AS DECIMAL(38,0)) - b_le * CAST((SELECT n FROM tot)"
-              " AS DECIMAL(38,0)) AS STRING) AS DOUBLE)")} AS f
+              " AS DECIMAL(38,0)) AS STRING) AS DOUBLE))")} AS f
           FROM cum
         )
         SELECT t.n AS n_weekend, t.m AS n_weekday,
@@ -1146,7 +1148,7 @@ def cramer_von_mises_weekend(spark: SparkSession,
     b = load(spark, sf_dir, "events").selectExpr(
         "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
         " AS wknd",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     gv = (b.groupBy(F.col("c").alias("v"))
            .agg(F.sum(F.when(F.col("wknd") == 1, 1).otherwise(0))
                  .cast("long").alias("cnt_we"),
@@ -1169,7 +1171,7 @@ def cramer_von_mises_weekend(spark: SparkSession,
             " * CAST(CAST(a_le * CAST(m AS DECIMAL(38,0))"
             " - b_le * CAST(n AS DECIMAL(38,0)) AS STRING) AS DOUBLE)")
     folded = (cum.crossJoin(F.broadcast(tot))
-                 .agg(F.expr(_fold_spark(f"collect_list({term})"))
+                 .agg(F.expr(fold_spark(f"collect_list({term})"))
                        .alias("f"),
                       F.max("n").alias("n"), F.max("m").alias("m")))
     return folded.selectExpr(

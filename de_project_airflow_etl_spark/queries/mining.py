@@ -15,9 +15,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-from de_project_airflow_etl_spark.queries.util import tracked_persist
+from de_project_airflow_etl_spark.queries.util import sql_cents, tracked_persist
 
-_O_CENTS = "CAST(ROUND(o_totalprice * 100) AS BIGINT)"
+_O_CENTS = sql_cents("o_totalprice")
 
 
 # -------------------------------------------- association rules

@@ -19,24 +19,12 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(terms_col: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort({terms_col})), (acc, v) -> acc + v)")
 
 
 # --------------------------------- log-rank test: purchaser churn
@@ -90,9 +78,9 @@ _LR_V_TERM = ("CASE WHEN n_at > 1 THEN"
         ),
         terms AS (
           SELECT CAST(SUM(d1_t) AS BIGINT) AS o1,
-                 {_fold_sql("list(CAST(d_t AS DOUBLE) * n1_at / n_at)")}
+                 {fold_sql("list(CAST(d_t AS DOUBLE) * n1_at / n_at)")}
                    AS e1,
-                 {_fold_sql(f"list({_LR_V_TERM})")} AS v
+                 {fold_sql(f"list({_LR_V_TERM})")} AS v
           FROM risk WHERE d_t > 0
         ),
         sizes AS (
@@ -157,10 +145,10 @@ def log_rank_test_ab_arms(spark: SparkSession,
         F.sum("n1_t").over(w).cast("long").alias("n1_at"))
     terms = risk.filter("d_t > 0").agg(
         F.sum("d1_t").cast("long").alias("o1"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(CAST(d_t AS DOUBLE) * n1_at / n_at)"))
          .alias("e1"),
-        F.expr(_fold_spark(f"collect_list({_LR_V_TERM})")).alias("v"))
+        F.expr(fold_spark(f"collect_list({_LR_V_TERM})")).alias("v"))
     sizes = life.agg(
         F.sum("grp").cast("long").alias("n_arm_a"),
         F.sum(1 - F.col("grp")).cast("long").alias("n_arm_b"))
@@ -189,7 +177,7 @@ _GAP_SECONDS_SQL = ("CASE WHEN event_type = 'purchase'"
         WITH e AS (
           SELECT user_id, ts, event_id,
                  ts + to_seconds({_GAP_SECONDS_SQL}) AS w_end,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         flagged AS (
@@ -232,7 +220,7 @@ _GAP_SECONDS_SQL = ("CASE WHEN event_type = 'purchase'"
 def session_window_dynamic_gap(spark: SparkSession,
                                sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        "user_id", "ts", "event_type", f"{_CENTS} AS c")
+        "user_id", "ts", "event_type", f"{sql_cents('value')} AS c")
     gap = F.expr(_GAP_SPARK)
     return (e.groupBy("user_id",
                       F.session_window("ts", gap).alias("w"))
@@ -263,7 +251,7 @@ _CUC_RHO = ("(CAST(2 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 4)"
     "cucconi_location_scale_weekend",
     oracle=f"""
         WITH e AS (
-          SELECT {_WKND_SQL} AS wknd, {_CENTS} AS c FROM events
+          SELECT {_WKND_SQL} AS wknd, {sql_cents('value')} AS c FROM events
         ),
         cells AS (
           SELECT c, CAST(SUM(wknd) AS BIGINT) AS n_we_c,
@@ -295,8 +283,8 @@ _CUC_RHO = ("(CAST(2 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 4)"
         ),
         z AS (
           SELECT n_we, n_wd, n,
-                 ({_wide('u4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zu,
-                 ({_wide('v4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zv,
+                 ({wide('u4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zu,
+                 ({wide('v4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zv,
                  {_CUC_RHO} AS rho
           FROM s
         )
@@ -322,7 +310,7 @@ _CUC_RHO = ("(CAST(2 AS DOUBLE) * (CAST(n AS DOUBLE) * n - 4)"
 def cucconi_location_scale_weekend(spark: SparkSession,
                                    sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_WKND_SPARK} AS wknd", f"{_CENTS} AS c")
+        f"{_WKND_SPARK} AS wknd", f"{sql_cents('value')} AS c")
     cells = e.groupBy("c").agg(
         F.sum("wknd").cast("long").alias("n_we_c"),
         F.sum(1 - F.col("wknd")).cast("long").alias("n_wd_c"))
@@ -347,8 +335,8 @@ def cucconi_location_scale_weekend(spark: SparkSession,
             .selectExpr("u4", "v4", "n_we", "n", "n - n_we AS n_wd"))
     z = s.selectExpr(
         "n_we", "n_wd", "n",
-        f"({_wide('u4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zu",
-        f"({_wide('v4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zv",
+        f"({wide('u4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zu",
+        f"({wide('v4')} / 4 - {_CUC_E}) / SQRT({_CUC_VAR}) AS zv",
         f"{_CUC_RHO} AS rho")
     return z.selectExpr(
         "n_we AS n_weekend", "n_wd AS n_weekday", "zu", "zv", "rho",
@@ -425,7 +413,7 @@ def seasonal_mann_kendall_dow(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("cents"))
              .selectExpr("x", "x % 7 AS dow", "cents")
              .localCheckpoint())  # calendar-bounded; feeds 3 consumers
     a = daily.selectExpr("dow", "x AS xa", "cents AS ca")
@@ -531,7 +519,7 @@ def kendalls_w_dow_concordance(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents"))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("cents"))
              .selectExpr("x DIV 7 AS wk", "x % 7 AS dow", "cents")
              .localCheckpoint())  # calendar-bounded; feeds 4 consumers
     complete = (daily.groupBy("wk")

@@ -16,14 +16,7 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _sql_wide(col: str) -> str:
-    return f"CAST(CAST({col} AS VARCHAR) AS DOUBLE)"
+from de_project_airflow_etl_spark.queries.util import wide
 
 
 # ---------------------------------------------------------------------
@@ -99,8 +92,8 @@ def negative_binomial_user_counts(spark: SparkSession,
         F.expr("CAST(SUM(c) AS DECIMAL(38,0))").alias("s1"),
         F.expr("CAST(SUM(CAST(c AS DECIMAL(38,0)) * c)"
                " AS DECIMAL(38,0))").alias("s2"))
-    m = f"({_wide('s1')} / n)"
-    v = (f"((n * {_wide('s2')} - {_wide('s1')} * {_wide('s1')})"
+    m = f"({wide('s1')} / n)"
+    v = (f"((n * {wide('s2')} - {wide('s1')} * {wide('s1')})"
          " / n / (n - 1))")
     return mom.selectExpr(
         "n AS n_users",

@@ -18,8 +18,7 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
+from de_project_airflow_etl_spark.queries.util import sql_cents
 
 
 # ---------------------------------------------------------------------
@@ -37,7 +36,7 @@ _CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
                quantile_cont(c, 0.25) AS q1_cents,
                quantile_cont(c, 0.5) AS median_cents,
                quantile_cont(c, 0.75) AS q3_cents
-        FROM (SELECT event_type, {_CENTS} AS c FROM events)
+        FROM (SELECT event_type, {sql_cents('value')} AS c FROM events)
         GROUP BY 1
     """,
     doc="The SQL:2023 inverse-distribution syntax percentile_cont(f) "
@@ -66,7 +65,7 @@ def percentile_cont_within_group_quartiles(spark: SparkSession,
                  AS median_cents,
                percentile_cont(0.75) WITHIN GROUP (ORDER BY c)
                  AS q3_cents
-        FROM (SELECT event_type, {_CENTS} AS c FROM ev_pcwg_r19)
+        FROM (SELECT event_type, {sql_cents('value')} AS c FROM ev_pcwg_r19)
         GROUP BY event_type
     """)
 
@@ -84,7 +83,7 @@ def percentile_cont_within_group_quartiles(spark: SparkSession,
     oracle=f"""
         WITH doc AS (
           SELECT event_type,
-                 json_object('t', event_type, 'v', {_CENTS},
+                 json_object('t', event_type, 'v', {sql_cents('value')},
                              'tags', json_array(event_type,
                                                 CAST(user_id AS
                                                      VARCHAR)))
@@ -119,7 +118,7 @@ def json_function_family_events(spark: SparkSession,
                                 sf_dir: str) -> DataFrame:
     doc = load(spark, sf_dir, "events").selectExpr(
         "event_type",
-        f"to_json(named_struct('t', event_type, 'v', {_CENTS}, "
+        f"to_json(named_struct('t', event_type, 'v', {sql_cents('value')}, "
         "'tags', array(event_type, CAST(user_id AS STRING)))) AS j")
     return (doc.groupBy("event_type")
             .agg(F.expr("CAST(SUM(size(json_object_keys(j)))"

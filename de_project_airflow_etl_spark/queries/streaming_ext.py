@@ -22,8 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
+from de_project_airflow_etl_spark.queries.util import sql_cents
 
 
 @query(
@@ -37,7 +36,7 @@ _CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
                  CAST(CAST(ts AS DATE) + 1 AS TIMESTAMP) AS day_end,
                  event_type,
                  CAST(COUNT(*) AS BIGINT) AS n_events,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1, 2, 3
         )
         SELECT day, event_type, n_events, cents
@@ -70,7 +69,7 @@ def streaming_chained_window_rollup(spark: SparkSession,
     )
     from de_project_airflow_etl_spark.streaming.stateful import _drain
     ev = read_event_stream(spark, sf_dir, with_watermark="1 day")
-    hourly = (ev.selectExpr("ts", "event_type", f"{_CENTS} AS c")
+    hourly = (ev.selectExpr("ts", "event_type", f"{sql_cents('value')} AS c")
                 .groupBy(F.window("ts", "1 hour").alias("w"),
                          "event_type")
                 .agg(F.count(F.lit(1)).alias("n"),

@@ -26,11 +26,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.queries.diagnostics import (
-    _CENTS, _fold_spark, _fold_sql, _wide,
-)
-from de_project_airflow_etl_spark.queries.surfaces_r9 import _dlit
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    dlit, fold_spark, fold_sql, sql_cents, wide,
+)
 
 SIL_SCALE = 1_000_000_000_000  # 1e12 per-point quantization grid
 
@@ -139,7 +138,7 @@ def _spark_cent_panel(spark: SparkSession, sf_dir: str) -> DataFrame:
                  AS BIGINT) AS n_positive,
                CAST(SUM(s_fp) AS BIGINT) AS sil_sum_fp,
                CAST(SUM(s_fp) AS DOUBLE)
-                 / (COUNT(*) * {_dlit(float(SIL_SCALE))})
+                 / (COUNT(*) * {dlit(float(SIL_SCALE))})
                  AS mean_silhouette
         FROM q GROUP BY label
     """,
@@ -181,7 +180,7 @@ def simplified_silhouette_labels(spark: SparkSession,
                   F.sum("s_fp").cast("long").alias("sil_sum_fp"))
              .selectExpr("label", "n_vecs", "n_positive", "sil_sum_fp",
                          f"CAST(sil_sum_fp AS DOUBLE) / (n_vecs"
-                         f" * {_dlit(float(SIL_SCALE))})"
+                         f" * {dlit(float(SIL_SCALE))})"
                          " AS mean_silhouette"))
 
 
@@ -203,7 +202,7 @@ def simplified_silhouette_labels(spark: SparkSession,
         scat AS (
           SELECT label, CAST(COUNT(*) AS BIGINT) AS n_vecs,
                  CAST(SUM(d_fp) AS DOUBLE)
-                   / (COUNT(*) * {_dlit(float(SIL_SCALE))}) AS s_l
+                   / (COUNT(*) * {dlit(float(SIL_SCALE))}) AS s_l
           FROM pt GROUP BY label
         ),
         spanel AS (
@@ -263,7 +262,7 @@ def davies_bouldin_labels(spark: SparkSession,
                    F.sum("d_fp").cast("long").alias("d_sum"))
               .selectExpr("label", "n_vecs",
                           f"CAST(d_sum AS DOUBLE) / (n_vecs"
-                          f" * {_dlit(float(SIL_SCALE))}) AS s_l")
+                          f" * {dlit(float(SIL_SCALE))}) AS s_l")
               .localCheckpoint())
     spanel = scat.agg(F.expr(
         "array_sort(collect_list(struct(label AS slabel, s_l)))")
@@ -291,7 +290,7 @@ def davies_bouldin_labels(spark: SparkSession,
         WITH b AS (
           SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
                    AS wknd,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         gv AS (
@@ -322,7 +321,7 @@ def davies_bouldin_labels(spark: SparkSession,
           FROM cum
         )
         SELECT t.n AS n_weekend, t.m AS n_weekday,
-               {_wide('s.num2')}
+               {wide('s.num2')}
                  / (2.0 * CAST(t.n AS DOUBLE) * t.m) AS cliffs_delta
         FROM s, tot t
     """,
@@ -344,7 +343,7 @@ def cliffs_delta_weekend(spark: SparkSession,
     b = load(spark, sf_dir, "events").selectExpr(
         "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
         " AS wknd",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     gv = (b.groupBy(F.col("c").alias("v"))
            .agg(F.sum(F.when(F.col("wknd") == 1, 1).otherwise(0))
                  .cast("long").alias("cnt_we"),
@@ -366,7 +365,7 @@ def cliffs_delta_weekend(spark: SparkSession,
                  F.max("n").alias("n"), F.max("m").alias("m")))
     return s.selectExpr(
         "n AS n_weekend", "m AS n_weekday",
-        f"{_wide('num2')} / (2.0 * CAST(n AS DOUBLE) * m)"
+        f"{wide('num2')} / (2.0 * CAST(n AS DOUBLE) * m)"
         " AS cliffs_delta")
 
 
@@ -383,7 +382,7 @@ QD_K = 7
                    // 7 AS blk,
                  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                    % 7 AS dow,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1, 2
         ),
         full_blocks AS (
@@ -426,15 +425,15 @@ QD_K = 7
                 FROM s GROUP BY dow)
         )
         SELECT agg.b AS n_blocks,
-               {_wide('agg.a16')} / 16.0 AS a_term,
-               {_wide('bsum.bnum16')} / (16.0 * agg.b) AS b_term,
-               CASE WHEN {_wide('agg.a16')}
-                      = {_wide('bsum.bnum16')} / agg.b
+               {wide('agg.a16')} / 16.0 AS a_term,
+               {wide('bsum.bnum16')} / (16.0 * agg.b) AS b_term,
+               CASE WHEN {wide('agg.a16')}
+                      = {wide('bsum.bnum16')} / agg.b
                     THEN CAST(NULL AS DOUBLE)
                     ELSE (agg.b - 1.0)
-                         * ({_wide('bsum.bnum16')} / (16.0 * agg.b))
-                         / ({_wide('agg.a16')} / 16.0
-                            - {_wide('bsum.bnum16')} / (16.0 * agg.b))
+                         * ({wide('bsum.bnum16')} / (16.0 * agg.b))
+                         / ({wide('agg.a16')} / 16.0
+                            - {wide('bsum.bnum16')} / (16.0 * agg.b))
                     END AS f_stat
         FROM agg, bsum
     """,
@@ -462,7 +461,7 @@ def quade_test_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
              " AS blk",
              "datediff(CAST(ts AS DATE), DATE'1970-01-01') % 7"
              " AS dow",
-             f"{_CENTS} AS c")
+             f"{sql_cents('value')} AS c")
          .groupBy("blk", "dow")
          .agg(F.sum("c").cast("long").alias("cents"))
          .localCheckpoint())
@@ -497,15 +496,15 @@ def quade_test_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
     bsum = (s.groupBy("dow").agg(F.sum("s4").cast("long").alias("sj"))
              .agg(F.expr("CAST(SUM(CAST(sj AS DECIMAL(38,0)) * sj)"
                          " AS BIGINT)").alias("bnum16")))
-    a_term = f"{_wide('a16')} / 16.0"
-    b_term = f"{_wide('bnum16')} / (16.0 * b)"
+    a_term = f"{wide('a16')} / 16.0"
+    b_term = f"{wide('bnum16')} / (16.0 * b)"
     return (agg.crossJoin(F.broadcast(b_cnt))
                .crossJoin(F.broadcast(bsum))
                .selectExpr(
                    "b AS n_blocks",
                    f"{a_term} AS a_term",
                    f"{b_term} AS b_term",
-                   f"CASE WHEN {_wide('a16')} = {_wide('bnum16')} / b"
+                   f"CASE WHEN {wide('a16')} = {wide('bnum16')} / b"
                    " THEN CAST(NULL AS DOUBLE)"
                    f" ELSE (b - 1.0) * ({b_term})"
                    f" / ({a_term} - {b_term}) END AS f_stat"))
@@ -528,10 +527,10 @@ def quade_test_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
           FROM documents GROUP BY source
         )
         SELECT source, n_docs, n_words, n_complex,
-               {_dlit(0.4)} * (CAST(n_words AS DOUBLE) / n_docs
-                 + {_dlit(100.0)} * n_complex / n_words) AS fog_index,
-               {_dlit(1.0430)} * SQRT({_dlit(30.0)} * n_complex
-                 / n_docs) + {_dlit(3.1291)} AS smog_index
+               {dlit(0.4)} * (CAST(n_words AS DOUBLE) / n_docs
+                 + {dlit(100.0)} * n_complex / n_words) AS fog_index,
+               {dlit(1.0430)} * SQRT({dlit(30.0)} * n_complex
+                 / n_docs) + {dlit(3.1291)} AS smog_index
         FROM m
     """,
     doc="Gunning Fog and SMOG readability per source — the two "
@@ -559,10 +558,10 @@ def smog_fog_readability_by_source(spark: SparkSession,
                .alias("n_complex")))
     return m.selectExpr(
         "source", "n_docs", "n_words", "n_complex",
-        f"{_dlit(0.4)} * (CAST(n_words AS DOUBLE) / n_docs"
-        f" + {_dlit(100.0)} * n_complex / n_words) AS fog_index",
-        f"{_dlit(1.0430)} * SQRT({_dlit(30.0)} * n_complex / n_docs)"
-        f" + {_dlit(3.1291)} AS smog_index")
+        f"{dlit(0.4)} * (CAST(n_words AS DOUBLE) / n_docs"
+        f" + {dlit(100.0)} * n_complex / n_words) AS fog_index",
+        f"{dlit(1.0430)} * SQRT({dlit(30.0)} * n_complex / n_docs)"
+        f" + {dlit(3.1291)} AS smog_index")
 
 
 # ------------------ MATTR moving-average type-token ratio per source
@@ -600,7 +599,7 @@ MATTR_W = 25
         SELECT source, CAST(COUNT(*) AS BIGINT) AS n_docs_scored,
                CAST(SUM(mattr_fp) AS BIGINT) AS mattr_sum_fp,
                CAST(SUM(mattr_fp) AS DOUBLE)
-                 / (COUNT(*) * {_dlit(float(SIL_SCALE))})
+                 / (COUNT(*) * {dlit(float(SIL_SCALE))})
                  AS mean_mattr
         FROM q GROUP BY source
     """,
@@ -644,7 +643,7 @@ def mattr_lexical_diversity_by_source(spark: SparkSession,
              .selectExpr("source", "n_docs_scored", "mattr_sum_fp",
                          f"CAST(mattr_sum_fp AS DOUBLE)"
                          f" / (n_docs_scored"
-                         f" * {_dlit(float(SIL_SCALE))}) AS mean_mattr"))
+                         f" * {dlit(float(SIL_SCALE))}) AS mean_mattr"))
 
 
 # ------------- Ansari-Bradley dispersion test: weekend vs weekday
@@ -680,7 +679,7 @@ _AB_SS = ("(CAST(CAST(rt2 AS STRING) AS DOUBLE)"
         WITH b AS (
           SELECT CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END
                    AS wknd,
-                 {_CENTS} AS c
+                 {sql_cents('value')} AS c
           FROM events
         ),
         gv AS (
@@ -711,8 +710,8 @@ _AB_SS = ("(CAST(CAST(rt2 AS STRING) AS DOUBLE)"
           FROM runs
         ),
         folded AS (
-          SELECT {_fold_sql(_AB_TERM)} AS ab2,
-                 {_fold_sql(_AB_SS)} AS ss2
+          SELECT {fold_sql(f"list({_AB_TERM})")} AS ab2,
+                 {fold_sql(f"list({_AB_SS})")} AS ss2
           FROM scored
         ),
         tot2 AS (
@@ -754,7 +753,7 @@ def ansari_bradley_weekend_value(spark: SparkSession,
     b = load(spark, sf_dir, "events").selectExpr(
         "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
         " AS wknd",
-        f"{_CENTS} AS c")
+        f"{sql_cents('value')} AS c")
     gv = (b.groupBy(F.col("c").alias("v"))
            .agg(F.sum(F.when(F.col("wknd") == 1, 1).otherwise(0))
                  .cast("long").alias("cnt_we"),
@@ -778,8 +777,8 @@ def ansari_bradley_weekend_value(spark: SparkSession,
         "cnt_we", "cnt_v",
         f"{_g2('(lo + cnt_v)', 'DIV')} - {_g2('lo', 'DIV')} AS rt2")
     folded = scored.agg(
-        F.expr(_fold_spark(f"collect_list({_AB_TERM})")).alias("ab2"),
-        F.expr(_fold_spark(f"collect_list({_AB_SS})")).alias("ss2"))
+        F.expr(fold_spark(f"collect_list({_AB_TERM})")).alias("ab2"),
+        F.expr(fold_spark(f"collect_list({_AB_SS})")).alias("ss2"))
     fin = (folded.crossJoin(F.broadcast(tot))
                  .selectExpr(
                      "n1", "n2", "nn", "ab2", "ss2",
@@ -803,7 +802,7 @@ def ansari_bradley_weekend_value(spark: SparkSession,
     oracle=f"""
         SELECT event_type,
                CAST(COUNT(*) AS BIGINT) AS n_events,
-               CAST(SUM({_CENTS}) AS BIGINT) AS sum_cents
+               CAST(SUM({sql_cents('value')}) AS BIGINT) AS sum_cents
         FROM events
         WHERE event_id % 19 = 0
         GROUP BY event_type
@@ -844,7 +843,7 @@ def jsonl_stream_sink_roundtrip(spark: SparkSession,
     shutil.rmtree(cp, ignore_errors=True)
     src = (read_event_stream(spark, sf_dir, with_watermark=None)
            .filter(F.col("event_id") % 19 == 0)
-           .selectExpr("event_id", "event_type", f"{_CENTS} AS cents"))
+           .selectExpr("event_id", "event_type", f"{sql_cents('value')} AS cents"))
     q = (src.writeStream.format("launch_library")
             .option("path", out)
             .option("checkpointLocation", cp)

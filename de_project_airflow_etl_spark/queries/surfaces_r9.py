@@ -23,12 +23,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.registry import query
-from de_project_airflow_etl_spark.queries.diagnostics import (
-    _CENTS, _fold_spark, _fold_sql, _wide,
-)
 from de_project_airflow_etl_spark.tables import load
 from de_project_airflow_etl_spark.operators.dedup import _sql_lsh_pairs
 from de_project_airflow_etl_spark.queries.diagnostics import _SQL_TOPK_REL
+from de_project_airflow_etl_spark.queries.util import (
+    dlit, fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 def _spark_pair_cos(x: str, y: str) -> str:
@@ -51,15 +51,6 @@ def _sql_pair_cos(x: str, y: str) -> str:
     return (f"{dot(x, y)} / (SQRT({dot(x, x)}) * SQRT({dot(y, y)}))")
 
 
-def _dlit(x: float) -> str:
-    """A double literal rendered IDENTICALLY in both engines: repr()
-    round-trips exactly and a string cast is strtod — correctly
-    rounded everywhere (bare decimal literals parse as DECIMAL in
-    Spark, and DuckDB's decimal->double cast is not correctly
-    rounded; round-8 module head)."""
-    return f"CAST('{x!r}' AS DOUBLE)"
-
-
 # ---------------------------------------------------------------------
 # Readability indices per source (document = sentence unit).
 
@@ -70,15 +61,15 @@ def _dlit(x: float) -> str:
 _READ_EXPRS = (
     "source", "n_docs", "n_words", "n_alnum", "n_letters",
     "n_sentences_unit", "n_syllables",
-    f"{_dlit(4.71)} * (CAST(n_alnum AS DOUBLE) / n_words)"
-    f" + {_dlit(0.5)} * (CAST(n_words AS DOUBLE) / n_docs)"
-    f" - {_dlit(21.43)} AS ari",
-    f"{_dlit(0.0588)} * ({_dlit(100.0)} * n_letters / n_words)"
-    f" - {_dlit(0.296)} * ({_dlit(100.0)} * n_docs / n_words)"
-    f" - {_dlit(15.8)} AS coleman_liau",
-    f"{_dlit(206.835)}"
-    f" - {_dlit(1.015)} * (CAST(n_words AS DOUBLE) / n_docs)"
-    f" - {_dlit(84.6)} * (CAST(n_syllables AS DOUBLE) / n_words)"
+    f"{dlit(4.71)} * (CAST(n_alnum AS DOUBLE) / n_words)"
+    f" + {dlit(0.5)} * (CAST(n_words AS DOUBLE) / n_docs)"
+    f" - {dlit(21.43)} AS ari",
+    f"{dlit(0.0588)} * ({dlit(100.0)} * n_letters / n_words)"
+    f" - {dlit(0.296)} * ({dlit(100.0)} * n_docs / n_words)"
+    f" - {dlit(15.8)} AS coleman_liau",
+    f"{dlit(206.835)}"
+    f" - {dlit(1.015)} * (CAST(n_words AS DOUBLE) / n_docs)"
+    f" - {dlit(84.6)} * (CAST(n_syllables AS DOUBLE) / n_words)"
     " AS flesch",
 )
 
@@ -172,7 +163,7 @@ def readability_indices_by_source(spark: SparkSession,
         JOIN deg ON deg.z = t.z
         LEFT JOIN und u ON u.lo = t.a AND u.hi = t.c
         GROUP BY t.a, t.c
-    """.replace("{FOLD}", _fold_sql("CAST(1 AS DOUBLE) / d"))
+    """.replace("{FOLD}", fold_sql("list(CAST(1 AS DOUBLE) / d)"))
        .replace("{LSH_PAIRS}", _sql_lsh_pairs()),
     doc="Resource-allocation scores over the verified near-dup "
         "graph: every two-hop pair (documents sharing a near-dup "
@@ -213,7 +204,7 @@ def resource_allocation_link_pred(spark: SparkSession,
                   .groupBy(F.col("a").alias("doc_lo"),
                            F.col("c").alias("doc_hi"))
                   .agg(F.count(F.lit(1)).cast("long").alias("n_common"),
-                       F.expr(_fold_spark(
+                       F.expr(fold_spark(
                            "collect_list(CAST(1 AS DOUBLE) / d)"))
                         .alias("ra_score"),
                        F.expr("CAST(MAX(CASE WHEN lo IS NULL THEN 0"
@@ -230,7 +221,7 @@ def resource_allocation_link_pred(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         l AS (
@@ -248,10 +239,10 @@ def resource_allocation_link_pred(spark: SparkSession,
           FROM l WHERE c7 IS NOT NULL
         )
         SELECT n_days_scored,
-               {_wide('sse7')} AS sse_seasonal7,
-               {_wide('sse1')} AS sse_naive1,
-               CASE WHEN {_wide('sse1')} = 0 THEN CAST(NULL AS DOUBLE)
-                    ELSE SQRT({_wide('sse7')} / {_wide('sse1')}) END
+               {wide('sse7')} AS sse_seasonal7,
+               {wide('sse1')} AS sse_naive1,
+               CASE WHEN {wide('sse1')} = 0 THEN CAST(NULL AS DOUBLE)
+                    ELSE SQRT({wide('sse7')} / {wide('sse1')}) END
                  AS theil_u2
         FROM s
     """,
@@ -270,7 +261,7 @@ def resource_allocation_link_pred(spark: SparkSession,
 def theil_u_daily_forecasts(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
-         .selectExpr("CAST(ts AS DATE) AS day", f"{_CENTS} AS c")
+         .selectExpr("CAST(ts AS DATE) AS day", f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     lagw = Window.orderBy("day")
     l = d.select(
@@ -285,10 +276,10 @@ def theil_u_daily_forecasts(spark: SparkSession,
          .alias("sse1"))
     return s.selectExpr(
         "n_days_scored",
-        f"{_wide('sse7')} AS sse_seasonal7",
-        f"{_wide('sse1')} AS sse_naive1",
-        f"CASE WHEN {_wide('sse1')} = 0 THEN CAST(NULL AS DOUBLE)"
-        f" ELSE SQRT({_wide('sse7')} / {_wide('sse1')}) END"
+        f"{wide('sse7')} AS sse_seasonal7",
+        f"{wide('sse1')} AS sse_naive1",
+        f"CASE WHEN {wide('sse1')} = 0 THEN CAST(NULL AS DOUBLE)"
+        f" ELSE SQRT({wide('sse7')} / {wide('sse1')}) END"
         " AS theil_u2")
 
 
@@ -306,7 +297,7 @@ PG_K = 7
                    // 7 AS blk,
                  date_diff('day', DATE '1970-01-01', CAST(ts AS DATE))
                    % 7 AS dow,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1, 2
         ),
         full_blocks AS (
@@ -361,7 +352,7 @@ def pages_trend_test_dow(spark: SparkSession, sf_dir: str) -> DataFrame:
              " AS blk",
              "datediff(CAST(ts AS DATE), DATE'1970-01-01') % 7"
              " AS dow",
-             f"{_CENTS} AS c")
+             f"{sql_cents('value')} AS c")
          .groupBy("blk", "dow")
          .agg(F.sum("c").cast("long").alias("cents"))
          .localCheckpoint())
@@ -402,7 +393,7 @@ ECE_BIN_C = 5000
     "ece_calibration_purchase",
     oracle=f"""
         WITH e AS (
-          SELECT {_CENTS} AS c,
+          SELECT {sql_cents('value')} AS c,
                  CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END
                    AS y
           FROM events
@@ -421,11 +412,11 @@ ECE_BIN_C = 5000
         ),
         folded AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS n_bins,
-                 {_fold_sql(
-                     "(CAST(n_b AS DOUBLE)"
+                 {fold_sql(
+                     "list((CAST(n_b AS DOUBLE)"
                      " / (SELECT n FROM tot))"
                      " * ABS(CAST(pos_b AS DOUBLE) / n_b"
-                     f" - sum_c / {ECE_SCALE} / n_b)")} AS ece,
+                     f" - sum_c / {ECE_SCALE} / n_b))")} AS ece,
                  MAX(ABS(CAST(pos_b AS DOUBLE) / n_b
                      - sum_c / {ECE_SCALE} / n_b)) AS mce
           FROM bins
@@ -449,7 +440,7 @@ ECE_BIN_C = 5000
 def ece_calibration_purchase(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_CENTS} AS c",
+        f"{sql_cents('value')} AS c",
         "CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END AS y")
     bins = (e.groupBy(F.expr(
                 f"LEAST(CAST(9 AS BIGINT),"
@@ -465,7 +456,7 @@ def ece_calibration_purchase(spark: SparkSession,
            f" - sum_c / {ECE_SCALE} / n_b)")
     folded = (bins.crossJoin(F.broadcast(tot))
                   .agg(F.count(F.lit(1)).cast("long").alias("n_bins"),
-                       F.expr(_fold_spark(
+                       F.expr(fold_spark(
                            f"collect_list((CAST(n_b AS DOUBLE) / n)"
                            f" * {gap})")).alias("ece"),
                        F.expr(f"MAX({gap})").alias("mce"),
@@ -482,7 +473,7 @@ def ece_calibration_purchase(spark: SparkSession,
     oracle=f"""
         WITH d AS (
           SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         l AS (
@@ -540,7 +531,7 @@ def ece_calibration_purchase(spark: SparkSession,
 def runs_test_daily_updown(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
-         .selectExpr("CAST(ts AS DATE) AS day", f"{_CENTS} AS c")
+         .selectExpr("CAST(ts AS DATE) AS day", f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     lagw = Window.orderBy("day")
     l = d.select(
@@ -584,10 +575,10 @@ def runs_test_daily_updown(spark: SparkSession,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                CAST(COUNT(*) FILTER (WHERE dayofweek(ts) IN (0, 6))
                  AS BIGINT) AS n_weekend,
-               CAST(SUM({_CENTS})
+               CAST(SUM({sql_cents('value')})
                  FILTER (WHERE dayofweek(ts) IN (0, 6)) AS BIGINT)
                  AS weekend_cents,
-               CAST(SUM({_CENTS})
+               CAST(SUM({sql_cents('value')})
                  FILTER (WHERE dayofweek(ts) NOT IN (0, 6)) AS BIGINT)
                  AS weekday_cents,
                CAST(COUNT(DISTINCT user_id)
@@ -617,10 +608,10 @@ def filter_clause_weekday_mix(spark: SparkSession,
                CAST(COUNT(*) AS BIGINT) AS n_events,
                CAST(COUNT(*) FILTER (WHERE (dayofweek(ts) - 1)
                  IN (0, 6)) AS BIGINT) AS n_weekend,
-               CAST(SUM({_CENTS})
+               CAST(SUM({sql_cents('value')})
                  FILTER (WHERE (dayofweek(ts) - 1) IN (0, 6))
                  AS BIGINT) AS weekend_cents,
-               CAST(SUM({_CENTS})
+               CAST(SUM({sql_cents('value')})
                  FILTER (WHERE (dayofweek(ts) - 1) NOT IN (0, 6))
                  AS BIGINT) AS weekday_cents,
                CAST(COUNT(DISTINCT user_id)
@@ -721,7 +712,7 @@ RS_SCALES = (8, 16)
     oracle=f"""
         WITH d AS (
           SELECT CAST(ts AS DATE) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         ),
         arr AS (
@@ -792,7 +783,7 @@ RS_SCALES = (8, 16)
 )
 def rescaled_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = (load(spark, sf_dir, "events")
-         .selectExpr("CAST(ts AS DATE) AS day", f"{_CENTS} AS c")
+         .selectExpr("CAST(ts AS DATE) AS day", f"{sql_cents('value')} AS c")
          .groupBy("day").agg(F.sum("c").cast("long").alias("cents")))
     arr = d.agg(
         F.expr("transform(array_sort(collect_list(struct(day, cents))),"
@@ -841,7 +832,7 @@ def rescaled_range_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS VARCHAR) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM events GROUP BY 1
         )
         SELECT day, cents,
@@ -873,7 +864,7 @@ def named_window_daily_stats(spark: SparkSession,
     return spark.sql(f"""
         WITH d AS (
           SELECT CAST(CAST(ts AS DATE) AS STRING) AS day,
-                 CAST(SUM({_CENTS}) AS BIGINT) AS cents
+                 CAST(SUM({sql_cents('value')}) AS BIGINT) AS cents
           FROM nwd_events GROUP BY day
         )
         SELECT day, cents,

@@ -54,6 +54,54 @@ def sql_cents(expr: str) -> str:
     return f"CAST(ROUND({expr} * 100) AS BIGINT)"
 
 
+# ------------------------------------- exact SQL idioms, both engines
+#
+# The helpers below return SQL text that Spark and DuckDB both parse
+# and evaluate to the bit-identical double, so a query's Spark
+# expression and its oracle are built from the same string.
+
+def wide(col: str) -> str:
+    """Wide exact integer (BIGINT / DECIMAL(38,0) / HUGEINT) -> double
+    through the decimal string: both engines parse it with a correctly
+    rounded strtod, while a direct cast of a value past 2^53 is not
+    guaranteed to round alike on both. (DuckDB reads STRING as
+    VARCHAR.)"""
+    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
+
+
+def dlit(x: float) -> str:
+    """A double literal rendered identically in both engines: repr()
+    round-trips exactly and the string cast is correctly rounded."""
+    return f"CAST('{x!r}' AS DOUBLE)"
+
+
+def fold_spark(terms_col: str) -> str:
+    """Deterministic Spark sum of a bounded double array: fold the
+    SORTED terms left to right from an explicit 0.0 seed. Paired with
+    ``fold_sql`` it gives the bit-identical double, where SUM() over
+    doubles depends on each engine's accumulation order. Running-sum
+    windows are no substitute (DuckDB may combine them by segment
+    tree).
+
+    Precondition: the terms are non-NULL. ``collect_list`` drops a
+    NULL term (terms 1.0, NULL, 2.0 fold to 3.0) while DuckDB's
+    ``list()`` keeps it and the fold returns NULL."""
+    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
+            f"(acc, v) -> acc + v)")
+
+
+def fold_sql(list_expr: str) -> str:
+    """DuckDB twin of ``fold_spark`` over a list expression, e.g.
+    ``fold_sql("list(t)")`` beside ``fold_spark("collect_list(t)")``.
+    ``list_reduce`` takes no seed, so 0.0 is prepended to the sorted
+    list, which reproduces Spark's association exactly. A group with
+    no terms folds to 0.0 on both engines.
+
+    Precondition: the terms are non-NULL (see ``fold_spark``)."""
+    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
+            f"list_sort({list_expr})), (acc, v) -> acc + v)")
+
+
 # ---------------------------------------------------- distributed rank
 
 RANK_BUCKETS = 32        # value-range buckets per refinement level

@@ -23,8 +23,8 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import sql_cents, wide
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 _WKND_SPARK = "CASE WHEN (dayofweek(ts) - 1) IN (0, 6) THEN 1 ELSE 0 END"
 _WKND_SQL = "CASE WHEN dayofweek(ts) IN (0, 6) THEN 1 ELSE 0 END"
 
@@ -36,10 +36,6 @@ _SQL_DAILY = """
                    AS cents
           FROM events GROUP BY 1
         )"""
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -57,7 +53,7 @@ def _wide(col: str) -> str:
 
 _BM_CELLS_SQL = f"""
         e AS (
-          SELECT {_WKND_SQL} AS wknd, {_CENTS} AS c FROM events
+          SELECT {_WKND_SQL} AS wknd, {sql_cents('value')} AS c FROM events
         ),
         cells AS (
           SELECT c, CAST(SUM(wknd) AS BIGINT) AS t1,
@@ -105,9 +101,9 @@ _BM_CELLS_SQL = f"""
                  / (2 * CAST(n1 AS DOUBLE) * n2) AS p_hat,
                (CAST(n1 AS DOUBLE) * s22 - CAST(n2 AS DOUBLE) * s21)
                / ((n1 + n2)
-                  * SQRT({_wide('u1sq')}
+                  * SQRT({wide('u1sq')}
                            / (CAST(n1 AS DOUBLE) * (n1 - 1))
-                         + {_wide('u2sq')}
+                         + {wide('u2sq')}
                            / (CAST(n2 AS DOUBLE) * (n2 - 1))))
                  AS w_bm
         FROM dev
@@ -133,7 +129,7 @@ _BM_CELLS_SQL = f"""
 def brunner_munzel_weekend(spark: SparkSession,
                            sf_dir: str) -> DataFrame:
     e = load(spark, sf_dir, "events").selectExpr(
-        f"{_WKND_SPARK} AS wknd", f"{_CENTS} AS c")
+        f"{_WKND_SPARK} AS wknd", f"{sql_cents('value')} AS c")
     cells = e.groupBy("c").agg(
         F.sum("wknd").cast("long").alias("t1"),
         F.sum(1 - F.col("wknd")).cast("long").alias("t2"))
@@ -172,9 +168,9 @@ def brunner_munzel_weekend(spark: SparkSession,
         " / (2 * CAST(n1 AS DOUBLE) * n2) AS p_hat",
         "(CAST(n1 AS DOUBLE) * s22 - CAST(n2 AS DOUBLE) * s21)"
         " / ((n1 + n2)"
-        f" * SQRT({_wide('u1sq')}"
+        f" * SQRT({wide('u1sq')}"
         " / (CAST(n1 AS DOUBLE) * (n1 - 1))"
-        f" + {_wide('u2sq')}"
+        f" + {wide('u2sq')}"
         " / (CAST(n2 AS DOUBLE) * (n2 - 1))))"
         " AS w_bm")
 
@@ -363,7 +359,7 @@ def bartels_rank_von_neumann_daily(spark: SparkSession,
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("cents")))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("cents")))
     r = daily.select(
         "x",
         (2 * F.rank().over(Window.orderBy("cents"))

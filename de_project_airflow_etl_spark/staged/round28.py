@@ -35,22 +35,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 #: daily cents rollup with the observed-sequence index t = 1..n
@@ -79,7 +66,7 @@ def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("y")))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("y")))
     return (daily
             .select("x", "y",
                     F.row_number().over(Window.orderBy("x"))
@@ -113,13 +100,13 @@ def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         r AS (
           SELECT seq.t, s.n, s.st, s.stt,
-                 {_wide("(CAST(s.n AS HUGEINT) * s.stt - "
+                 {wide("(CAST(s.n AS HUGEINT) * s.stt - "
                         "CAST(s.st AS HUGEINT) * s.st)"
                         " * (CAST(s.n AS HUGEINT) * seq.y - s.sy)"
                         " - (CAST(s.n AS HUGEINT) * s.sty"
                         "    - CAST(s.st AS HUGEINT) * s.sy)"
                         " * (CAST(s.n AS HUGEINT) * seq.t - s.st)")}
-                   / {_wide("CAST(s.n AS HUGEINT)"
+                   / {wide("CAST(s.n AS HUGEINT)"
                             " * (CAST(s.n AS HUGEINT) * s.stt"
                             "    - CAST(s.st AS HUGEINT) * s.st)")}
                    AS e
@@ -127,9 +114,9 @@ def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         f AS (
           SELECT MAX(n) AS n, MAX(st) AS st, MAX(stt) AS stt,
-                 {_fold_sql("e * e")} AS su,
-                 {_fold_sql("t * e * e")} AS stu,
-                 {_fold_sql("e * e * e * e")} AS suu
+                 {fold_sql("list(e * e)")} AS su,
+                 {fold_sql("list(t * e * e)")} AS stu,
+                 {fold_sql("list(e * e * e * e)")} AS suu
           FROM r
         )
         SELECT n AS n_days,
@@ -138,7 +125,7 @@ def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
                          - CAST(st AS HUGEINT) * st = 0
                       OR n * suu - su * su <= 0 THEN NULL
                  ELSE n * (n * stu - st * su) * (n * stu - st * su)
-                   / ({_wide("CAST(n AS HUGEINT) * stt"
+                   / ({wide("CAST(n AS HUGEINT) * stt"
                              " - CAST(st AS HUGEINT) * st")}
                       * (n * suu - su * su))
                END AS bp_stat,
@@ -181,14 +168,14 @@ def breusch_pagan_daily_trend(spark: SparkSession,
              "    - CAST(st AS DECIMAL(38,0)) * st)")
     r = (seq.crossJoin(F.broadcast(s))
          .selectExpr("t", "n", "st", "stt",
-                     f"{_wide(e_num)} / {_wide(e_den)} AS e"))
+                     f"{wide(e_num)} / {wide(e_den)} AS e"))
     f = r.agg(
         F.max("n").alias("n"), F.max("st").alias("st"),
         F.max("stt").alias("stt"),
-        F.expr(_fold_spark("collect_list(e * e)")).alias("su"),
-        F.expr(_fold_spark("collect_list(t * e * e)")).alias("stu"),
-        F.expr(_fold_spark("collect_list(e * e * e * e)")).alias("suu"))
-    d_wide = _wide("CAST(n AS DECIMAL(38,0)) * stt"
+        F.expr(fold_spark("collect_list(e * e)")).alias("su"),
+        F.expr(fold_spark("collect_list(t * e * e)")).alias("stu"),
+        F.expr(fold_spark("collect_list(e * e * e * e)")).alias("suu"))
+    d_wide = wide("CAST(n AS DECIMAL(38,0)) * stt"
                    " - CAST(st AS DECIMAL(38,0)) * st")
     return f.selectExpr(
         "n AS n_days",
@@ -214,11 +201,11 @@ _CHOW_SEGS = (("p", "TRUE"), ("a", "2 * t <= n"), ("b", "2 * t > n"))
 
 def _chow_rss(tag: str) -> str:
     """RSS of segment `tag` from its exact integer moment columns."""
-    a = _wide(f"n_{tag} * syy_{tag} - sy_{tag} * sy_{tag}")
-    b = _wide(f"n_{tag} * sty_{tag} - st_{tag} * sy_{tag}")
+    a = wide(f"n_{tag} * syy_{tag} - sy_{tag} * sy_{tag}")
+    b = wide(f"n_{tag} * sty_{tag} - st_{tag} * sy_{tag}")
     c = f"n_{tag} * stt_{tag} - st_{tag} * st_{tag}"
     return (f"CASE WHEN {c} = 0 THEN NULL ELSE"
-            f" ({a} - {b} * {b} / {_wide(c)})"
+            f" ({a} - {b} * {b} / {wide(c)})"
             f" / CAST(n_{tag} AS DOUBLE) END")
 
 
@@ -342,22 +329,22 @@ def chow_break_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         r AS (
           SELECT seq.x, seq.t, s.n,
-                 {_wide("(CAST(s.n AS HUGEINT) * s.stt - "
+                 {wide("(CAST(s.n AS HUGEINT) * s.stt - "
                         "CAST(s.st AS HUGEINT) * s.st)"
                         " * (CAST(s.n AS HUGEINT) * seq.y - s.sy)"
                         " - (CAST(s.n AS HUGEINT) * s.sty"
                         "    - CAST(s.st AS HUGEINT) * s.sy)"
                         " * (CAST(s.n AS HUGEINT) * seq.t - s.st)")}
-                   / {_wide("CAST(s.n AS HUGEINT)"
+                   / {wide("CAST(s.n AS HUGEINT)"
                             " * (CAST(s.n AS HUGEINT) * s.stt"
                             "    - CAST(s.st AS HUGEINT) * s.st)")}
                    AS e,
                  CAST(1 AS DOUBLE) / s.n
-                   + {_wide("(CAST(s.n AS HUGEINT) * seq.t - s.st)"
+                   + {wide("(CAST(s.n AS HUGEINT) * seq.t - s.st)"
                             " * (CAST(s.n AS HUGEINT) * seq.t"
                             "    - s.st)")}
                      / (CAST(s.n AS DOUBLE)
-                        * {_wide("CAST(s.n AS HUGEINT) * s.stt"
+                        * {wide("CAST(s.n AS HUGEINT) * s.stt"
                                  " - CAST(s.st AS HUGEINT) * s.st")})
                    AS h
           FROM seq, s
@@ -365,7 +352,7 @@ def chow_break_test_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
                 - CAST(s.st AS HUGEINT) * s.st > 0 AND s.n > 2
         ),
         s2 AS (
-          SELECT {_fold_sql("e * e")} AS sse, MAX(n) AS n FROM r
+          SELECT {fold_sql("list(e * e)")} AS sse, MAX(n) AS n FROM r
         )
         SELECT CAST(DATE '1970-01-01' + CAST(r.x AS INTEGER)
                     AS TIMESTAMP) AS day,
@@ -409,23 +396,23 @@ def ols_influence_diagnostics_daily(spark: SparkSession,
              " - (CAST(n AS DECIMAL(38,0)) * sty"
              "    - CAST(st AS DECIMAL(38,0)) * sy)"
              " * (CAST(n AS DECIMAL(38,0)) * t - st)")
-    lev_num = _wide("(CAST(n AS DECIMAL(38,0)) * t - st)"
+    lev_num = wide("(CAST(n AS DECIMAL(38,0)) * t - st)"
                     " * (CAST(n AS DECIMAL(38,0)) * t - st)")
     r = (seq.crossJoin(F.broadcast(s))
          .where(F.expr(f"({dvar}) > 0 AND n > 2"))
          .selectExpr(
              "x",
-             f"{_wide(e_num)}"
-             f" / {_wide(f'CAST(n AS DECIMAL(38,0)) * ({dvar})')} AS e",
+             f"{wide(e_num)}"
+             f" / {wide(f'CAST(n AS DECIMAL(38,0)) * ({dvar})')} AS e",
              f"CAST(1 AS DOUBLE) / n + {lev_num}"
-             f" / (CAST(n AS DOUBLE) * {_wide(dvar)}) AS h"))
+             f" / (CAST(n AS DOUBLE) * {wide(dvar)}) AS h"))
     # r is referenced twice (SSE panel + final projection) but NOT
     # checkpointed: seq below it already is, so the recompute is
     # panel-sized, and a checkpoint here would hide the interior
     # broadcast joins and windows from the plan gates (round-6 rule).
     # the degeneracy WHERE is a broadcast-scalar predicate: r is either
     # empty or the full panel, so count(r) == n of the regression
-    s2 = r.agg(F.expr(_fold_spark("collect_list(e * e)")).alias("sse"),
+    s2 = r.agg(F.expr(fold_spark("collect_list(e * e)")).alias("sse"),
                F.count(F.lit(1)).cast("long").alias("n"))
     return (r.crossJoin(F.broadcast(s2))
             .selectExpr(
@@ -474,7 +461,7 @@ def ols_influence_diagnostics_daily(spark: SparkSession,
         )
         SELECT n AS n_days,
                CASE WHEN b = 0 THEN NULL
-                 ELSE {_wide('a')} / (CAST(n AS DOUBLE) * {_wide('b')})
+                 ELSE {wide('a')} / (CAST(n AS DOUBLE) * {wide('b')})
                END AS kpss_eta
         FROM agg
     """,
@@ -512,8 +499,8 @@ def kpss_level_stationarity_daily(spark: SparkSession,
                  .alias("b")))
     return agg.selectExpr(
         "n AS n_days",
-        f"CASE WHEN b = 0 THEN NULL ELSE {_wide('a')}"
-        f" / (CAST(n AS DOUBLE) * {_wide('b')}) END AS kpss_eta")
+        f"CASE WHEN b = 0 THEN NULL ELSE {wide('a')}"
+        f" / (CAST(n AS DOUBLE) * {wide('b')}) END AS kpss_eta")
 
 
 # ---------------------------------------------------------------------
@@ -545,10 +532,10 @@ _VR_Q = 7
                CASE WHEN mq < 2 OR m1 < 2
                       OR m1 * ss1 - CAST(s1 AS HUGEINT) * s1 = 0
                       THEN NULL
-                 ELSE {_wide("(mq * ssq - CAST(sq AS HUGEINT) * sq)"
+                 ELSE {wide("(mq * ssq - CAST(sq AS HUGEINT) * sq)"
                              " * m1 * m1")}
                    / ({_VR_Q}.0
-                      * {_wide("(m1 * ss1 - CAST(s1 AS HUGEINT) * s1)"
+                      * {wide("(m1 * ss1 - CAST(s1 AS HUGEINT) * s1)"
                                " * mq * mq")})
                END AS vr_stat
         FROM s
@@ -583,9 +570,9 @@ def variance_ratio_daily_revenue(spark: SparkSession,
         F.count("dq").cast("long").alias("mq"),
         F.sum("dq").cast("long").alias("sq"),
         F.expr("SUM(CAST(dq AS DECIMAL(38,0)) * dq)").alias("ssq"))
-    num = _wide("(mq * ssq - CAST(sq AS DECIMAL(38,0)) * sq)"
+    num = wide("(mq * ssq - CAST(sq AS DECIMAL(38,0)) * sq)"
                 " * m1 * m1")
-    den = _wide("(m1 * ss1 - CAST(s1 AS DECIMAL(38,0)) * s1)"
+    den = wide("(m1 * ss1 - CAST(s1 AS DECIMAL(38,0)) * s1)"
                 " * mq * mq")
     return s.selectExpr(
         "m1 AS n_diffs", "mq AS n_qdiffs",

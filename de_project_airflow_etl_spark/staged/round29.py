@@ -33,13 +33,9 @@ from de_project_airflow_etl_spark.operators.dedup import (
     _lsh_verified,
     _sql_lsh_pairs,
 )
-from de_project_airflow_etl_spark.queries.util import tracked_persist
+from de_project_airflow_etl_spark.queries.util import tracked_persist, wide
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
 
 
 # ---------------------------------------------------------------------
@@ -78,9 +74,9 @@ def _wide(col: str) -> str:
         mm AS (SELECT CAST(COUNT(*) AS BIGINT) AS m FROM pairs)
         SELECT mm.m AS n_edges, e_in.e_within,
                CASE WHEN mm.m = 0 THEN NULL
-                 ELSE {_wide("4 * CAST(mm.m AS HUGEINT)"
+                 ELSE {wide("4 * CAST(mm.m AS HUGEINT)"
                              " * e_in.e_within - dsum.d2")}
-                   / {_wide("4 * CAST(mm.m AS HUGEINT) * mm.m")}
+                   / {wide("4 * CAST(mm.m AS HUGEINT) * mm.m")}
                END AS modularity_q
         FROM mm, e_in, dsum
     """,
@@ -124,8 +120,8 @@ def _modularity(pairs: DataFrame, lab: DataFrame) -> DataFrame:
             .agg(F.expr("SUM(CAST(dc AS DECIMAL(38,0)) * dc)")
                   .alias("d2")))
     mm = pairs.agg(F.count(F.lit(1)).cast("long").alias("m"))
-    num = _wide("4 * CAST(m AS DECIMAL(38,0)) * e_within - d2")
-    den = _wide("4 * CAST(m AS DECIMAL(38,0)) * m")
+    num = wide("4 * CAST(m AS DECIMAL(38,0)) * e_within - d2")
+    den = wide("4 * CAST(m AS DECIMAL(38,0)) * m")
     return (mm.crossJoin(F.broadcast(e_in)).crossJoin(F.broadcast(dsum))
             .selectExpr("m AS n_edges", "e_within",
                         f"CASE WHEN m = 0 THEN NULL ELSE {num} / {den}"
@@ -165,8 +161,8 @@ def _modularity(pairs: DataFrame, lab: DataFrame) -> DataFrame:
         )
         SELECT mm AS n_directed_edges,
                CASE WHEN mm = 0 OR mm * s2 - s1 * s1 = 0 THEN NULL
-                 ELSE {_wide('mm * se - s1 * s1')}
-                   / {_wide('mm * s2 - s1 * s1')}
+                 ELSE {wide('mm * se - s1 * s1')}
+                   / {wide('mm * s2 - s1 * s1')}
                END AS assortativity_r
         FROM s
     """,
@@ -219,8 +215,8 @@ def _assortativity(pairs: DataFrame) -> DataFrame:
     return s.selectExpr(
         "mm AS n_directed_edges",
         "CASE WHEN mm = 0 OR mm * s2 - s1 * s1 = 0 THEN NULL"
-        f" ELSE {_wide('mm * se - s1 * s1')}"
-        f" / {_wide('mm * s2 - s1 * s1')} END AS assortativity_r")
+        f" ELSE {wide('mm * se - s1 * s1')}"
+        f" / {wide('mm * s2 - s1 * s1')} END AS assortativity_r")
 
 
 # ---------------------------------------------------------------------
@@ -354,9 +350,9 @@ def _label_prop(pairs: DataFrame, docs: DataFrame) -> DataFrame:
                 FROM edges GROUP BY s)
         )
         SELECT tri.t AS n_triangles,
-               CAST({_wide('wdg.w2')} / 2 AS DOUBLE) AS n_wedges,
+               CAST({wide('wdg.w2')} / 2 AS DOUBLE) AS n_wedges,
                CASE WHEN wdg.w2 = 0 THEN NULL
-                 ELSE 6.0 * tri.t / {_wide('wdg.w2')}
+                 ELSE 6.0 * tri.t / {wide('wdg.w2')}
                END AS transitivity
         FROM tri, wdg
     """,
@@ -397,7 +393,7 @@ def _transitivity(pairs: DataFrame) -> DataFrame:
     return (tri.crossJoin(F.broadcast(wdg))
             .selectExpr(
                 "t AS n_triangles",
-                f"CAST({_wide('w2')} / 2 AS DOUBLE) AS n_wedges",
+                f"CAST({wide('w2')} / 2 AS DOUBLE) AS n_wedges",
                 "CASE WHEN w2 = 0 THEN NULL"
-                f" ELSE CAST(6 AS DOUBLE) * t / {_wide('w2')} END"
+                f" ELSE CAST(6 AS DOUBLE) * t / {wide('w2')} END"
                 " AS transitivity"))

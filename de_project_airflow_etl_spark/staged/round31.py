@@ -35,8 +35,10 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 _SQL_DAILY_T = """
         daily AS (
@@ -53,25 +55,11 @@ _SQL_DAILY_T = """
         )"""
 
 
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
-
-
 def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("y")))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("y")))
     return (daily
             .select("x", "y",
                     F.row_number().over(Window.orderBy("x"))
@@ -110,10 +98,10 @@ def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT n AS n_common_days,
                CASE WHEN n = 0 THEN NULL
-                 ELSE {_wide('sd')} / n END AS mean_loss_diff,
+                 ELSE {wide('sd')} / n END AS mean_loss_diff,
                CASE WHEN n < 2 OR n * qd - sd * sd = 0 THEN NULL
-                 ELSE {_wide('sd')} * SQRT(CAST(n AS DOUBLE))
-                   / SQRT({_wide('n * qd - sd * sd')})
+                 ELSE {wide('sd')} * SQRT(CAST(n AS DOUBLE))
+                   / SQRT({wide('n * qd - sd * sd')})
                END AS dm_stat
         FROM s
     """,
@@ -148,11 +136,11 @@ def diebold_mariano_forecasts(spark: SparkSession,
               F.expr("SUM(dd * dd)").alias("qd"))
     return s.selectExpr(
         "n AS n_common_days",
-        f"CASE WHEN n = 0 THEN NULL ELSE {_wide('sd')} / n END"
+        f"CASE WHEN n = 0 THEN NULL ELSE {wide('sd')} / n END"
         " AS mean_loss_diff",
         "CASE WHEN n < 2 OR n * qd - sd * sd = 0 THEN NULL"
-        f" ELSE {_wide('sd')} * SQRT(CAST(n AS DOUBLE))"
-        f" / SQRT({_wide('n * qd - sd * sd')}) END AS dm_stat")
+        f" ELSE {wide('sd')} * SQRT(CAST(n AS DOUBLE))"
+        f" / SQRT({wide('n * qd - sd * sd')}) END AS dm_stat")
 
 
 # ---------------------------------------------------------------------
@@ -233,7 +221,7 @@ _RMST_CENSOR_DAYS = 7  # mirrors mining.KM_CENSOR_DAYS
         )
         SELECT (SELECT CAST(COUNT(*) AS BIGINT) FROM life) AS n_users,
                CAST({RMST_TAU} AS BIGINT) AS tau_days,
-               head.first_seg + {_fold_sql('seg')} AS rmst_days
+               head.first_seg + {fold_sql('list(seg)')} AS rmst_days
         FROM segs CROSS JOIN head
         GROUP BY head.first_seg
     """,
@@ -306,7 +294,7 @@ def rmst_user_lifetimes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (segs.crossJoin(F.broadcast(head))
             .crossJoin(F.broadcast(n_users))
             .groupBy("first_seg", "n_users")
-            .agg(F.expr(_fold_spark("collect_list(seg)")).alias("f"))
+            .agg(F.expr(fold_spark("collect_list(seg)")).alias("f"))
             .selectExpr("n_users",
                         f"CAST({RMST_TAU} AS BIGINT) AS tau_days",
                         "first_seg + f AS rmst_days"))
@@ -347,14 +335,14 @@ def _trig_case(vals: list[str]) -> str:
         ),
         z AS (
           SELECT seq.t, s.n,
-                 {_wide('CAST(s.n AS HUGEINT) * seq.y - s.sy')} AS zz,
+                 {wide('CAST(s.n AS HUGEINT) * seq.y - s.sy')} AS zz,
                  CAST(s.n AS HUGEINT) * seq.y - s.sy AS zi
           FROM seq, s
         ),
         f AS (
           SELECT MAX(n) AS n,
-                 {_fold_sql("zz * (" + _trig_case(_COS7) + ")")} AS c,
-                 {_fold_sql("zz * (" + _trig_case(_SIN7) + ")")} AS sn,
+                 {fold_sql("list(zz * (" + _trig_case(_COS7) + "))")} AS c,
+                 {fold_sql("list(zz * (" + _trig_case(_SIN7) + "))")} AS sn,
                  SUM(zi * zi) AS b
           FROM z
         )
@@ -363,7 +351,7 @@ def _trig_case(vals: list[str]) -> str:
                  / (CAST(n AS DOUBLE) * n * n) AS power_weekly,
                CASE WHEN b = 0 THEN NULL
                  ELSE 2 * (c * c + sn * sn)
-                   / (CAST(n AS DOUBLE) * {_wide('b')})
+                   / (CAST(n AS DOUBLE) * {wide('b')})
                END AS var_fraction_weekly
         FROM f
     """,
@@ -392,14 +380,14 @@ def periodogram_weekly_power(spark: SparkSession,
     z = (seq.crossJoin(F.broadcast(s))
          .selectExpr(
              "t", "n",
-             f"{_wide('CAST(n AS DECIMAL(38,0)) * y - sy')} AS zz",
+             f"{wide('CAST(n AS DECIMAL(38,0)) * y - sy')} AS zz",
              "CAST(n AS DECIMAL(38,0)) * y - sy AS zi"))
     f = z.agg(
         F.max("n").alias("n"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(zz * (" + _trig_case(_COS7) + "))"))
          .alias("c"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(zz * (" + _trig_case(_SIN7) + "))"))
          .alias("sn"),
         F.expr("SUM(zi * zi)").alias("b"))
@@ -409,5 +397,5 @@ def periodogram_weekly_power(spark: SparkSession,
         " AS power_weekly",
         "CASE WHEN b = 0 THEN NULL"
         " ELSE 2 * (c * c + sn * sn)"
-        f" / (CAST(n AS DOUBLE) * {_wide('b')}) END"
+        f" / (CAST(n AS DOUBLE) * {wide('b')}) END"
         " AS var_fraction_weekly")

@@ -32,6 +32,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, wide,
+)
 
 # logged arm: first md5 nibble (the round-26 / log_rank / SRM arms);
 # cross-fitting fold: SECOND md5 nibble — independent of the arm.
@@ -43,20 +46,6 @@ _FOLD_SQL = ("CASE WHEN substring(md5(CAST(user_id AS VARCHAR)), 2, 1)"
              " < '8' THEN 1 ELSE 0 END")
 _FOLD_SPARK = ("CASE WHEN substring(md5(CAST(user_id AS STRING)), 2,"
                " 1) < '8' THEN 1 ELSE 0 END")
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
 
 
 # ---------------------------------------------------------------------
@@ -108,18 +97,18 @@ def _fold_sql(term_expr: str) -> str:
         agg AS (
           SELECT CAST(SUM(CASE WHEN c_o IS NULL OR c_o = 0
                           THEN 1 ELSE 0 END) AS BIGINT) AS n_bad,
-                 {_fold_sql(
-                     "CASE WHEN c_o IS NULL OR c_o = 0 THEN 0.0 ELSE"
-                     " (" + _wide(
+                 {fold_sql(
+                     "list(CASE WHEN c_o IS NULL OR c_o = 0 THEN 0.0 ELSE"
+                     " (" + wide(
                          "CAST(n_fw AS HUGEINT) * s_o"
                          " + 2 * CAST(COALESCE(s_m, 0) AS HUGEINT)"
                          "   * c_o"
                          " - 2 * CAST(COALESCE(c_m, 0) AS HUGEINT)"
-                         "   * s_o") + ") / c_o END")} AS dr_sum,
-                 {_fold_sql(
-                     "CASE WHEN c_o IS NULL OR c_o = 0 THEN 0.0 ELSE"
-                     " (" + _wide("CAST(n_fw AS HUGEINT) * s_o")
-                     + ") / c_o END")} AS dm_sum
+                         "   * s_o") + ") / c_o END)")} AS dr_sum,
+                 {fold_sql(
+                     "list(CASE WHEN c_o IS NULL OR c_o = 0 THEN 0.0 ELSE"
+                     " (" + wide("CAST(n_fw AS HUGEINT) * s_o")
+                     + ") / c_o END)")} AS dm_sum
           FROM terms
         )
         SELECT t.n AS n_users,
@@ -180,20 +169,20 @@ def doubly_robust_offpolicy_value(spark: SparkSession,
                    & (F.col("w") == F.col("wo")), "left")
              .select("n_fw", "c_m", "s_m", "c_o", "s_o"))
     tot = u.agg(F.count(F.lit(1)).cast("long").alias("n"))
-    dr_num = _wide("CAST(n_fw AS DECIMAL(38,0)) * s_o"
+    dr_num = wide("CAST(n_fw AS DECIMAL(38,0)) * s_o"
                    " + 2 * CAST(COALESCE(s_m, 0) AS DECIMAL(38,0))"
                    " * c_o"
                    " - 2 * CAST(COALESCE(c_m, 0) AS DECIMAL(38,0))"
                    " * s_o")
-    dm_num = _wide("CAST(n_fw AS DECIMAL(38,0)) * s_o")
+    dm_num = wide("CAST(n_fw AS DECIMAL(38,0)) * s_o")
     agg = terms.agg(
         F.expr("CAST(SUM(CASE WHEN c_o IS NULL OR c_o = 0 THEN 1"
                " ELSE 0 END) AS BIGINT)").alias("n_bad"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(CASE WHEN c_o IS NULL OR c_o = 0 THEN"
             f" CAST(0.0 AS DOUBLE) ELSE ({dr_num}) / c_o END)"))
          .alias("dr_sum"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list(CASE WHEN c_o IS NULL OR c_o = 0 THEN"
             f" CAST(0.0 AS DOUBLE) ELSE ({dm_num}) / c_o END)"))
          .alias("dm_sum"))

@@ -34,22 +34,9 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
-
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
-
-
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
 
 # ---------------------------------------------------------------------
@@ -61,7 +48,7 @@ def _fold_sql(term_expr: str) -> str:
 #   z = U / sqrt(V)
 
 _GW_V_TERM = ("CASE WHEN n_at > 1 THEN "
-              + _wide("CAST(n1_at AS @BIG@) * (n_at - n1_at)"
+              + wide("CAST(n1_at AS @BIG@) * (n_at - n1_at)"
                       " * d_t * (n_at - d_t)")
               + " / (n_at - 1) ELSE CAST(0.0 AS DOUBLE) END")
 
@@ -109,7 +96,7 @@ _GW_V_TERM = ("CASE WHEN n_at > 1 THEN "
         terms AS (
           SELECT SUM(CAST(n_at AS HUGEINT) * d1_t
                      - CAST(n1_at AS HUGEINT) * d_t) AS u_stat,
-                 {_fold_sql(_GW_V_TERM.replace('@BIG@', 'HUGEINT'))}
+                 {fold_sql(f"list({_GW_V_TERM.replace('@BIG@', 'HUGEINT')})")}
                    AS v
           FROM risk WHERE d_t > 0
         ),
@@ -119,9 +106,9 @@ _GW_V_TERM = ("CASE WHEN n_at > 1 THEN "
           FROM u
         )
         SELECT s.n_arm_a, s.n_arm_b,
-               {_wide('t.u_stat')} AS gehan_u, t.v AS gehan_var,
+               {wide('t.u_stat')} AS gehan_u, t.v AS gehan_var,
                CASE WHEN t.v <= 0 THEN NULL
-                 ELSE {_wide('t.u_stat')} / SQRT(t.v) END AS z_stat
+                 ELSE {wide('t.u_stat')} / SQRT(t.v) END AS z_stat
         FROM terms t CROSS JOIN sizes s
     """,
     doc="Gehan-Breslow-Wilcoxon test on the md5-nibble A/B arms "
@@ -175,7 +162,7 @@ def gehan_wilcoxon_ab_arms(spark: SparkSession,
         F.expr("SUM(CAST(n_at AS DECIMAL(38,0)) * d1_t"
                " - CAST(n1_at AS DECIMAL(38,0)) * d_t)")
          .alias("u_stat"),
-        F.expr(_fold_spark("collect_list("
+        F.expr(fold_spark("collect_list("
                            + _GW_V_TERM.replace("@BIG@",
                                                 "DECIMAL(38,0)")
                            + ")")).alias("v"))
@@ -184,10 +171,10 @@ def gehan_wilcoxon_ab_arms(spark: SparkSession,
         F.sum(1 - F.col("grp")).cast("long").alias("n_arm_b"))
     return (terms.crossJoin(F.broadcast(sizes))
             .selectExpr("n_arm_a", "n_arm_b",
-                        f"{_wide('u_stat')} AS gehan_u",
+                        f"{wide('u_stat')} AS gehan_u",
                         "v AS gehan_var",
                         "CASE WHEN v <= 0 THEN NULL"
-                        f" ELSE {_wide('u_stat')} / SQRT(v) END"
+                        f" ELSE {wide('u_stat')} / SQRT(v) END"
                         " AS z_stat"))
 
 
@@ -234,7 +221,7 @@ _ICC_RATERS_SQL = (
         )
         SELECT n AS n_docs,
                CASE WHEN n < 2 OR 2 * b + 2 * ww = 0 THEN NULL
-                 ELSE {_wide('2 * b - ww')} / {_wide('2 * b + 2 * ww')}
+                 ELSE {wide('2 * b - ww')} / {wide('2 * b + 2 * ww')}
                END AS icc_1_1
         FROM m
     """,
@@ -269,7 +256,7 @@ def icc_quality_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
     return m.selectExpr(
         "n AS n_docs",
         "CASE WHEN n < 2 OR 2 * b + 2 * ww = 0 THEN NULL"
-        f" ELSE {_wide('2 * b - ww')} / {_wide('2 * b + 2 * ww')} END"
+        f" ELSE {wide('2 * b - ww')} / {wide('2 * b + 2 * ww')} END"
         " AS icc_1_1")
 
 
@@ -302,10 +289,10 @@ def icc_quality_raters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT n AS n_days, sc AS n_events,
                CASE WHEN sc = 0 THEN NULL
-                 ELSE {_wide('a')} / (CAST(n AS DOUBLE) * sc)
+                 ELSE {wide('a')} / (CAST(n AS DOUBLE) * sc)
                END AS dispersion_stat,
                CASE WHEN sc = 0 OR n < 2 THEN NULL
-                 ELSE {_wide('a')} / (CAST(n AS DOUBLE) * sc * (n - 1))
+                 ELSE {wide('a')} / (CAST(n AS DOUBLE) * sc * (n - 1))
                END AS dispersion_index
         FROM agg
     """,
@@ -337,9 +324,9 @@ def poisson_dispersion_daily_counts(spark: SparkSession,
                  .alias("a")))
     return agg.selectExpr(
         "n AS n_days", "sc AS n_events",
-        f"CASE WHEN sc = 0 THEN NULL ELSE {_wide('a')}"
+        f"CASE WHEN sc = 0 THEN NULL ELSE {wide('a')}"
         " / (CAST(n AS DOUBLE) * sc) END AS dispersion_stat",
-        f"CASE WHEN sc = 0 OR n < 2 THEN NULL ELSE {_wide('a')}"
+        f"CASE WHEN sc = 0 OR n < 2 THEN NULL ELSE {wide('a')}"
         " / (CAST(n AS DOUBLE) * sc * (n - 1)) END"
         " AS dispersion_index")
 
@@ -379,18 +366,18 @@ def poisson_dispersion_daily_counts(spark: SparkSession,
         ),
         sc AS (
           SELECT MAX(n) AS n,
-                 {_wide('SUM(u * u)')} AS suu,
-                 {_wide('SUM(v * v)')} AS svv,
-                 {_wide('SUM(u * v)')} AS suv
+                 {wide('SUM(u * u)')} AS suu,
+                 {wide('SUM(v * v)')} AS svv,
+                 {wide('SUM(u * v)')} AS suv
           FROM cen
         )
         SELECT CAST(c.d AS TIMESTAMP) AS day,
                CASE WHEN sc.suu * sc.svv - sc.suv * sc.suv <= 0
                  THEN NULL
                  ELSE (sc.n - 1)
-                   * (sc.svv * {_wide('c.u')} * {_wide('c.u')}
-                      - 2 * sc.suv * {_wide('c.u')} * {_wide('c.v')}
-                      + sc.suu * {_wide('c.v')} * {_wide('c.v')})
+                   * (sc.svv * {wide('c.u')} * {wide('c.u')}
+                      - 2 * sc.suv * {wide('c.u')} * {wide('c.v')}
+                      + sc.suu * {wide('c.v')} * {wide('c.v')})
                    / (sc.suu * sc.svv - sc.suv * sc.suv)
                END AS mahalanobis_d2
         FROM cen c CROSS JOIN sc
@@ -416,7 +403,7 @@ def mahalanobis_outlier_days(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.to_date("ts").alias("d"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("a"),
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("a"),
                   F.count(F.lit(1)).cast("long").alias("b"))
              .localCheckpoint())
     s = daily.agg(F.count(F.lit(1)).cast("long").alias("n"),
@@ -427,17 +414,17 @@ def mahalanobis_outlier_days(spark: SparkSession,
                        "CAST(n AS DECIMAL(38,0)) * a - sa AS u",
                        "CAST(n AS DECIMAL(38,0)) * b - sb AS v"))
     sc = cen.agg(F.max("n").alias("nn"),
-                 F.expr(f"{_wide('SUM(u * u)')}").alias("suu"),
-                 F.expr(f"{_wide('SUM(v * v)')}").alias("svv"),
-                 F.expr(f"{_wide('SUM(u * v)')}").alias("suv"))
+                 F.expr(f"{wide('SUM(u * u)')}").alias("suu"),
+                 F.expr(f"{wide('SUM(v * v)')}").alias("svv"),
+                 F.expr(f"{wide('SUM(u * v)')}").alias("suv"))
     return (cen.crossJoin(F.broadcast(sc))
             .selectExpr(
                 "CAST(d AS TIMESTAMP) AS day",
                 "CASE WHEN suu * svv - suv * suv <= 0 THEN NULL"
                 " ELSE (nn - 1)"
-                f" * (svv * {_wide('u')} * {_wide('u')}"
-                f" - 2 * suv * {_wide('u')} * {_wide('v')}"
-                f" + suu * {_wide('v')} * {_wide('v')})"
+                f" * (svv * {wide('u')} * {wide('u')}"
+                f" - 2 * suv * {wide('u')} * {wide('v')}"
+                f" + suu * {wide('v')} * {wide('v')})"
                 " / (suu * svv - suv * suv) END AS mahalanobis_d2")
             .orderBy(F.col("mahalanobis_d2").desc_nulls_last(), "day")
             .limit(5))

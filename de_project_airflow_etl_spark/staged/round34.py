@@ -29,8 +29,10 @@ from pyspark.sql import functions as F
 
 from de_project_airflow_etl_spark.staged import staged_query
 from de_project_airflow_etl_spark.tables import load
+from de_project_airflow_etl_spark.queries.util import (
+    fold_spark, fold_sql, sql_cents, wide,
+)
 
-_CENTS = "CAST(ROUND(value * 100) AS BIGINT)"
 
 _SQL_DAILY_T = """
         daily AS (
@@ -47,25 +49,11 @@ _SQL_DAILY_T = """
         )"""
 
 
-def _wide(col: str) -> str:
-    return f"CAST(CAST({col} AS STRING) AS DOUBLE)"
-
-
-def _fold_spark(terms_col: str) -> str:
-    return (f"aggregate(array_sort({terms_col}), CAST(0.0 AS DOUBLE), "
-            f"(acc, v) -> acc + v)")
-
-
-def _fold_sql(term_expr: str) -> str:
-    return (f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-            f"list_sort(list({term_expr}))), (acc, v) -> acc + v)")
-
-
 def _spark_daily_t(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = (load(spark, sf_dir, "events")
              .groupBy(F.datediff(F.to_date("ts"),
                                  F.lit("1970-01-01")).alias("x"))
-             .agg(F.sum(F.expr(_CENTS)).cast("long").alias("y")))
+             .agg(F.sum(F.expr(sql_cents("value"))).cast("long").alias("y")))
     return (daily
             .select("x", "y",
                     F.row_number().over(Window.orderBy("x"))
@@ -141,11 +129,11 @@ _PACF_FINAL = """
         rho AS (
           SELECT n,
                  CASE WHEN c0 = 0 THEN NULL
-                   ELSE {_wide('c1')} / {_wide('c0')} END AS rho1,
+                   ELSE {wide('c1')} / {wide('c0')} END AS rho1,
                  CASE WHEN c0 = 0 THEN NULL
-                   ELSE {_wide('c2')} / {_wide('c0')} END AS rho2,
+                   ELSE {wide('c2')} / {wide('c0')} END AS rho2,
                  CASE WHEN c0 = 0 THEN NULL
-                   ELSE {_wide('c3')} / {_wide('c0')} END AS rho3
+                   ELSE {wide('c3')} / {wide('c0')} END AS rho3
           FROM c
         )
         {_PACF_FINAL}
@@ -191,12 +179,12 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                " ELSE CAST(0 AS DECIMAL(38,0)) END)").alias("c3"))
     rho = c.selectExpr(
         "n",
-        f"CASE WHEN c0 = 0 THEN NULL ELSE {_wide('c1')}"
-        f" / {_wide('c0')} END AS rho1",
-        f"CASE WHEN c0 = 0 THEN NULL ELSE {_wide('c2')}"
-        f" / {_wide('c0')} END AS rho2",
-        f"CASE WHEN c0 = 0 THEN NULL ELSE {_wide('c3')}"
-        f" / {_wide('c0')} END AS rho3")
+        f"CASE WHEN c0 = 0 THEN NULL ELSE {wide('c1')}"
+        f" / {wide('c0')} END AS rho1",
+        f"CASE WHEN c0 = 0 THEN NULL ELSE {wide('c2')}"
+        f" / {wide('c0')} END AS rho2",
+        f"CASE WHEN c0 = 0 THEN NULL ELSE {wide('c3')}"
+        f" / {wide('c0')} END AS rho3")
     rho.createOrReplaceTempView("rho")
     return spark.sql(_PACF_FINAL)
 
@@ -216,7 +204,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     "anova_effect_sizes_event_type",
     oracle=f"""
         WITH v AS (
-          SELECT event_type AS g, {_CENTS} AS c FROM events
+          SELECT event_type AS g, {sql_cents('value')} AS c FROM events
         ),
         grp AS (
           SELECT g, CAST(COUNT(*) AS BIGINT) AS n_g,
@@ -231,16 +219,16 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         f AS (
           SELECT CAST(COUNT(*) AS BIGINT) AS k,
-                 {_fold_sql(
-                     _wide("CAST(s_g AS HUGEINT) * s_g") + " / n_g")}
+                 {fold_sql(
+                     "list(" + wide("CAST(s_g AS HUGEINT) * s_g") + " / n_g)")}
                    AS fb
           FROM grp
         ),
         parts AS (
           SELECT t.n, f.k,
-                 {_wide('t.q')} - {_wide("CAST(t.s AS HUGEINT) * t.s")}
+                 {wide('t.q')} - {wide("CAST(t.s AS HUGEINT) * t.s")}
                    / t.n AS sst,
-                 f.fb - {_wide("CAST(t.s AS HUGEINT) * t.s")} / t.n
+                 f.fb - {wide("CAST(t.s AS HUGEINT) * t.s")} / t.n
                    AS ssb
           FROM tot t, f
         )
@@ -275,7 +263,7 @@ def pacf_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
 def anova_effect_sizes_event_type(spark: SparkSession,
                                   sf_dir: str) -> DataFrame:
     v = (load(spark, sf_dir, "events")
-         .selectExpr("event_type AS g", f"{_CENTS} AS c")
+         .selectExpr("event_type AS g", f"{sql_cents('value')} AS c")
          # feeds the group panel AND the totals panel
          .localCheckpoint())
     grp = v.groupBy("g").agg(F.count(F.lit(1)).cast("long").alias("n_g"),
@@ -285,14 +273,14 @@ def anova_effect_sizes_event_type(spark: SparkSession,
                 F.expr("SUM(CAST(c AS DECIMAL(38,0)) * c)").alias("q"))
     f = grp.agg(
         F.count(F.lit(1)).cast("long").alias("k"),
-        F.expr(_fold_spark(
+        F.expr(fold_spark(
             "collect_list("
-            + _wide("CAST(s_g AS DECIMAL(38,0)) * s_g") + " / n_g)"))
+            + wide("CAST(s_g AS DECIMAL(38,0)) * s_g") + " / n_g)"))
          .alias("fb"))
-    s2n = _wide("CAST(s AS DECIMAL(38,0)) * s")
+    s2n = wide("CAST(s AS DECIMAL(38,0)) * s")
     parts = (f.crossJoin(F.broadcast(tot))
              .selectExpr("n", "k",
-                         f"{_wide('q')} - {s2n} / n AS sst",
+                         f"{wide('q')} - {s2n} / n AS sst",
                          f"fb - {s2n} / n AS ssb"))
     return parts.selectExpr(
         "n AS n_events", "k AS k_groups",

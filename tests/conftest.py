@@ -29,3 +29,12 @@ def duck(sf_dir):
     con = duck_connection(sf_dir)
     yield con
     con.close()
+
+
+@pytest.fixture
+def release_caches(spark):
+    """Drop every cached relation after the test. Modules whose queries
+    persist() intermediates opt in with
+    ``pytestmark = pytest.mark.usefixtures("release_caches")``."""
+    yield
+    spark.catalog.clearCache()

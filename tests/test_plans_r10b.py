@@ -3,7 +3,9 @@ gates ride tests/test_staged_pen.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -51,9 +53,7 @@ def test_disc_bands_are_members_and_ordered(spark, sf_dir):
 
 def test_disc_bands_windows_sit_above_cell_aggregate(spark, sf_dir):
     df = REG["percentile_disc_bands_by_type"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))

@@ -10,7 +10,7 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -24,10 +24,7 @@ SCAN_BUDGETS_R10C = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R10C))
@@ -40,12 +37,6 @@ def test_r10c_final_plan_scan_budget(spark, sf_dir, name):
         f"{SCAN_BUDGETS_R10C[name]})")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 # The in-array queries must plan with zero window nodes; the two
 # cell-cumulation queries window only over post-aggregate cell tables
 # (covered by the registry-wide audit once promoted; here we pin the
@@ -55,7 +46,7 @@ def _window_nodes(df):
     "partial_corr_revenue_count_dow",
 ])
 def test_r10c_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 @pytest.mark.parametrize("name, max_wins", [
@@ -63,7 +54,7 @@ def test_r10c_no_window_nodes(spark, sf_dir, name):
     ("winsorized_mean_value", 2),
 ])
 def test_r10c_cell_windows_bounded(spark, sf_dir, name, max_wins):
-    wins = _window_nodes(REG[name].fn(spark, sf_dir))
+    wins = window_nodes(REG[name].fn(spark, sf_dir))
     assert len(wins) <= max_wins, name
 
 

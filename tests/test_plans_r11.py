@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -36,16 +38,10 @@ def test_r11_final_plan_scan_budget(spark, sf_dir, name):
         f"intermediate lost its checkpoint")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R11))
 def test_r11_windows_consume_aggregated_rows_only(spark, sf_dir, name):
     df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
+    for wnode in window_nodes(df):
         sub = list(_walk_jplan(wnode.children().apply(0)))
         names = [ch.getClass().getSimpleName() for ch in sub]
         assert any("Aggregate" in n for n in names) or not any(

@@ -10,7 +10,9 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -35,12 +37,6 @@ def test_r12_final_plan_scan_budget(spark, sf_dir, name):
         f"intermediate lost its checkpoint")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     """The sessionization windows must partition by user_id — a
     grows-with-data key, never an unpartitioned sweep over raw
@@ -53,7 +49,7 @@ def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
     m = e.select("user_id", F.expr(
         "CASE WHEN LAG(t) OVER (PARTITION BY user_id ORDER BY t)"
         " IS NULL THEN 1 ELSE 0 END").alias("x"))
-    for wnode in _window_nodes(m):
+    for wnode in window_nodes(m):
         spec = wnode.toString()
         assert "user_id" in spec.split("windowspecdefinition")[-1][:80]
 
@@ -61,7 +57,7 @@ def test_r12_littles_law_windows_partition_by_user(spark, sf_dir):
 @pytest.mark.parametrize("name", ["crostons_intermittent_demand"])
 def test_r12_fold_windows_consume_aggregates(spark, sf_dir, name):
     df = REG[name].fn(spark, sf_dir)
-    for wnode in _window_nodes(df):
+    for wnode in window_nodes(df):
         sub = list(_walk_jplan(wnode.children().apply(0)))
         names = [ch.getClass().getSimpleName() for ch in sub]
         assert any("Aggregate" in n for n in names) or not any(

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import node_names
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -17,8 +17,7 @@ def test_single_pass_readouts_have_no_joins_or_windows(spark, sf_dir):
     for name in ("difference_in_differences_arms",
                  "power_mde_event_value", "fleiss_kappa_quality_rules"):
         df = REG[name].fn(spark, sf_dir)
-        names = [n.getClass().getSimpleName()
-                 for n in _walk_jplan(df._jdf.queryExecution().sparkPlan())]
+        names = node_names(df)
         assert not any("Join" in n for n in names), (name, names)
         assert not any(n.startswith("WindowExec") for n in names), (
             name, names)

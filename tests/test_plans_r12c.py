@@ -14,10 +14,7 @@ from de_project_airflow_etl_spark.registry import all_queries
 REG = all_queries()
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_mmr_plan_shape(spark, sf_dir):

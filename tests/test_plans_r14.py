@@ -11,7 +11,7 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -34,10 +34,7 @@ SCAN_BUDGETS_R14 = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R14))
@@ -50,18 +47,12 @@ def test_r14_final_plan_scan_budget(spark, sf_dir, name):
         f"{SCAN_BUDGETS_R14[name]})")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 @pytest.mark.parametrize("name", [
     "cronbachs_alpha_quality_rules", "haberman_adjusted_residuals",
     "cross_source_ngram_overlap", "embedding_isotropy_panel",
 ])
 def test_r14_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 # ------------------------------------------------ range invariants

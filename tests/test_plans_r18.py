@@ -25,10 +25,7 @@ SCAN_BUDGETS_R18 = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R18))

@@ -10,7 +10,8 @@ from __future__ import annotations
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, scan_read_schema,
+    bnlj_builds_are_scalar, formatted_plan, node_names, scan_read_schema,
+    window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -21,10 +22,7 @@ R6_BANK = {n: q for n, q in all_queries().items()
             "de_project_airflow_etl_spark.queries.features")}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 # ------------------------------------------------- blanket join gate
@@ -104,9 +102,7 @@ def test_daily_stats_window_sits_above_daily_aggregate(spark, sf_dir,
         return any("Aggregate" in ch.getClass().getSimpleName()
                    for ch in _walk_jplan(node))
 
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows, f"{name}: expected a WindowExec"
     for wnode in windows:
         ch = wnode.children()
@@ -269,9 +265,7 @@ def test_survival_retention_windows_sit_above_lifetime_aggregate(
         assert "event_type" not in line and "props" not in line, (
             f"events scan not pruned: {line}")
     terms = _survival_km_terms(u)
-    jplan = terms._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(terms)
     assert windows, "expected the n_at_risk suffix-sum WindowExec"
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))
@@ -296,10 +290,8 @@ def test_lof_bucket_sizes_broadcast_not_windowed(spark, sf_dir):
     scan or Window left in the final plan means the pre-aggregation
     moved back inline; the pre-checkpoint shape itself is asserted by
     rebuilding the size relation the same way the query does."""
-    from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
     df = R6_BANK["lof_bucket_outliers"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    names = [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
+    names = node_names(df)
     assert not any(n.startswith("WindowExec") for n in names), names
     assert not any("FileSourceScan" in n or "BatchScan" in n
                    for n in names), (

@@ -8,7 +8,9 @@ oracle equality rides the registry-wide tests/test_correctness.py.
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, node_names, window_nodes, windows_sit_above_aggregates,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 R7B_BANK = {n: q for n, q in all_queries().items()
@@ -16,32 +18,12 @@ R7B_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.evaluation"}
 
 
-def _node_names(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-def _windows_sit_above_aggregates(df) -> None:
-    windows = _window_nodes(df)
-    assert windows, "expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "window consumes un-aggregated rows"
-
-
 def test_auc_cumulation_sits_above_score_aggregate(spark, sf_dir):
     """roc_auc's unpartitioned cumulative-negatives window is only
     legal because its input is the bounded integer-cents score
     distribution: every WindowExec subtree must contain an
     Aggregate (the global_row_number lesson applied to ranks)."""
-    _windows_sit_above_aggregates(
+    windows_sit_above_aggregates(
         R7B_BANK["roc_auc_purchase_value"].fn(spark, sf_dir))
 
 
@@ -51,8 +33,8 @@ def test_fold_statistics_use_no_windows(spark, sf_dir):
     plan must contain no WindowExec fed by raw rows; Cramér's V's
     margin windows must sit above the contingency aggregate."""
     df = R7B_BANK["anova_event_type_value"].fn(spark, sf_dir)
-    assert not _window_nodes(df), _node_names(df)
-    _windows_sit_above_aggregates(
+    assert not window_nodes(df), node_names(df)
+    windows_sit_above_aggregates(
         R7B_BANK["cramers_v_event_dow"].fn(spark, sf_dir))
 
 
@@ -60,7 +42,7 @@ def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
     """Welch t and the two-feature OLS are one map-side-combinable
     aggregate over the scan: no joins, no windows anywhere."""
     for name in ("welch_t_test_weekend_value", "ols_two_feature_price"):
-        names = _node_names(R7B_BANK[name].fn(spark, sf_dir))
+        names = node_names(R7B_BANK[name].fn(spark, sf_dir))
         assert not any("Join" in n for n in names), (name, names)
         assert not any(n.startswith("WindowExec") for n in names), (
             name, names)
@@ -97,7 +79,7 @@ def test_theta_sketch_heads_are_take_ordered(spark, sf_dir):
             .select(F.expr(_uh_spark()).alias("h"))
             .distinct()
             .orderBy("h").limit(THETA_K))
-    names = _node_names(head)
+    names = node_names(head)
     assert any("TakeOrderedAndProject" in n for n in names), names
     assert not any("Sort" == n for n in names), names
 
@@ -106,7 +88,7 @@ def test_attribution_join_is_equi_not_nested_loop(spark, sf_dir):
     """The purchase-touch fan-out must ride the user_id equi-join
     (sort-merge / shuffled-hash with the time range as residual),
     never a nested loop or cartesian over the fact table."""
-    names = _node_names(R7B_BANK["position_attribution_revenue"]
+    names = node_names(R7B_BANK["position_attribution_revenue"]
                         .fn(spark, sf_dir))
     assert not any("BroadcastNestedLoopJoin" in n
                    or "CartesianProduct" in n for n in names), names
@@ -119,7 +101,7 @@ def test_attribution_join_is_equi_not_nested_loop(spark, sf_dir):
 def test_daily_rollup_windows_sit_above_aggregates(spark, sf_dir):
     """Bollinger's frame windows consume the calendar-bounded daily
     aggregate, never raw events."""
-    _windows_sit_above_aggregates(
+    windows_sit_above_aggregates(
         R7B_BANK["bollinger_daily_revenue"].fn(spark, sf_dir))
 
 
@@ -156,7 +138,7 @@ def test_param_binding_folds_into_pushed_filter(spark, sf_dir):
 def test_group_by_all_plans_as_plain_aggregate(spark, sf_dir):
     """GROUP BY ALL must bind to the same single hash aggregate as
     the explicitly-keyed form — no windows, no joins."""
-    names = _node_names(R7B_BANK["group_by_all_weekday_mix"]
+    names = node_names(R7B_BANK["group_by_all_weekday_mix"]
                         .fn(spark, sf_dir))
     assert not any("Join" in n for n in names), names
     assert not any(n.startswith("WindowExec") for n in names), names

@@ -13,7 +13,9 @@ import math
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -52,12 +54,6 @@ def test_r8_final_plan_scan_budget(spark, sf_dir, name):
         f"intermediate lost its checkpoint")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 @pytest.mark.parametrize("name", [
     "atr_daily_value_range", "stochastic_oscillator_daily",
     "obv_daily_value_flow", "kruskal_wallis_value_by_type",
@@ -68,7 +64,7 @@ def test_r8_windows_consume_aggregated_rows_only(spark, sf_dir, name):
     each WindowExec subtree must contain an Aggregate or a
     checkpointed (already-reduced) RDD scan."""
     df = REG[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
+    windows = window_nodes(df)
     assert windows, f"{name}: expected a WindowExec"
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))
@@ -87,7 +83,7 @@ def test_r8_windows_consume_aggregated_rows_only(spark, sf_dir, name):
 def test_r8_fold_statistics_use_no_windows(spark, sf_dir, name):
     """The fold-based statistics reduce via array folds / plain
     aggregates — no WindowExec anywhere in the plan."""
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 def test_r8_topk_rank_rides_window_group_limit(spark, sf_dir):

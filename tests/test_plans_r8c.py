@@ -5,21 +5,18 @@ query-specific plan shapes and invariants)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, node_names, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
 
 
-def _node_names(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
-
-
 def test_zipf_head_is_take_ordered(spark, sf_dir):
     """The top-k head must plan as TakeOrderedAndProject (per-
     partition heaps), never a global sort of the vocabulary."""
-    names = _node_names(REG["zipf_rank_frequency_table"]
+    names = node_names(REG["zipf_rank_frequency_table"]
                         .fn(spark, sf_dir))
     assert any("TakeOrderedAndProject" in n for n in names), names
 
@@ -29,9 +26,7 @@ def test_bowley_windows_sit_above_cell_aggregate(spark, sf_dir):
     table, never raw rows: every WindowExec subtree must contain an
     Aggregate."""
     df = REG["bowley_skewness_by_type"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))
@@ -79,9 +74,7 @@ def test_bootstrap_ci_brackets_the_mean(spark, sf_dir):
 def test_elasticity_lag_window_sits_above_demand_aggregate(spark,
                                                            sf_dir):
     df = REG["arc_price_elasticity_brand"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))

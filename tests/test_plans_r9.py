@@ -11,7 +11,9 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import (
+    _walk_jplan, window_nodes,
+)
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -41,19 +43,13 @@ def test_r9_final_plan_scan_budget(spark, sf_dir, name):
         f"intermediate lost its checkpoint")
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
 @pytest.mark.parametrize("name", [
     "theil_u_daily_forecasts", "runs_test_daily_updown",
     "pages_trend_test_dow", "named_window_daily_stats",
 ])
 def test_r9_windows_consume_aggregated_rows_only(spark, sf_dir, name):
     df = REG[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
+    windows = window_nodes(df)
     assert windows, f"{name}: expected a WindowExec"
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))

@@ -3,15 +3,10 @@ gates ride tests/test_staged_pen.py)."""
 
 from __future__ import annotations
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import node_names, window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
-
-
-def _node_names(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
 
 
 def test_log_rank_windows_consume_lifetime_cells(spark, sf_dir):
@@ -19,9 +14,7 @@ def test_log_rank_windows_consume_lifetime_cells(spark, sf_dir):
     lifetime table: no window subtree may touch a raw parquet scan
     (the checkpoint hides the Aggregate — round-6-late rule)."""
     df = REG["log_rank_test_ab_arms"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows
     for wnode in windows:
         assert "Scan parquet" not in wnode.children().apply(0).toString()
@@ -77,7 +70,7 @@ def test_apply_in_arrow_plans_arrow_group_map(spark, sf_dir):
     """The group-map must run on the Arrow path (FlatMapGroupsInArrow
     / ...InBatch exec), never pickled row-at-a-time Python."""
     df = REG["group_apply_arrow_label_stats"].fn(spark, sf_dir)
-    names = _node_names(df)
+    names = node_names(df)
     assert any("Arrow" in n or "FlatMapGroupsInBatch" in n
                for n in names), names
     assert not any("BatchEvalPython" in n for n in names), names

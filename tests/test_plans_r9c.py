@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import pytest
 
-from de_project_airflow_etl_spark.plans.inspect import _walk_jplan
+from de_project_airflow_etl_spark.plans.inspect import window_nodes
 from de_project_airflow_etl_spark.registry import all_queries
 
 REG = all_queries()
@@ -34,10 +34,7 @@ SCAN_BUDGETS_R9C = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(SCAN_BUDGETS_R9C))
@@ -48,12 +45,6 @@ def test_r9c_final_plan_scan_budget(spark, sf_dir, name):
     assert n_scans <= SCAN_BUDGETS_R9C[name], (
         f"{name}: {n_scans} parquet scans (budget "
         f"{SCAN_BUDGETS_R9C[name]})")
-
-
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
 
 
 # Every r9c query except the three that legitimately window —
@@ -68,7 +59,7 @@ def _window_nodes(df):
     "lexical_dominance_panel", "funnel_conversion_steps",
 ])
 def test_r9c_no_window_nodes(spark, sf_dir, name):
-    assert not _window_nodes(REG[name].fn(spark, sf_dir)), name
+    assert not window_nodes(REG[name].fn(spark, sf_dir)), name
 
 
 def test_err_rank_rides_window_group_limit(spark, sf_dir):
@@ -80,7 +71,7 @@ def test_err_rank_rides_window_group_limit(spark, sf_dir):
 
 
 def test_bowker_window_partitioned_by_user(spark, sf_dir):
-    wins = _window_nodes(
+    wins = window_nodes(
         REG["bowker_symmetry_event_transitions"].fn(spark, sf_dir))
     assert wins, "the transition lag must be a window"
     for w in wins:

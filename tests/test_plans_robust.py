@@ -11,7 +11,8 @@ from __future__ import annotations
 import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
-    bnlj_builds_are_scalar, formatted_plan, _walk_jplan,
+    bnlj_builds_are_scalar, formatted_plan, node_names,
+    window_nodes, windows_sit_above_aggregates,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -20,10 +21,7 @@ R7N_BANK = {n: q for n, q in all_queries().items()
             == "de_project_airflow_etl_spark.queries.robust"}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_bank_is_complete():
@@ -65,26 +63,11 @@ def test_plans_have_no_unbounded_nested_loops(spark, sf_dir, name):
 # ----------------------------------------- window-hazard structure
 
 
-def _window_nodes(df):
-    jplan = df._jdf.queryExecution().sparkPlan()
-    return [n for n in _walk_jplan(jplan)
-            if n.getClass().getSimpleName().startswith("WindowExec")]
-
-
-def _windows_sit_above_aggregates(df) -> None:
-    windows = _window_nodes(df)
-    assert windows, "expected a WindowExec"
-    for wnode in windows:
-        sub = list(_walk_jplan(wnode.children().apply(0)))
-        assert any("Aggregate" in ch.getClass().getSimpleName()
-                   for ch in sub), "window consumes un-aggregated rows"
-
-
 def test_pr_auc_windows_sit_above_aggregates(spark, sf_dir):
     """The unpartitioned cumulative window is only legal because its
     input is the bounded score-cell table: every WindowExec subtree
     must contain an Aggregate (the global_row_number lesson)."""
-    _windows_sit_above_aggregates(
+    windows_sit_above_aggregates(
         R7N_BANK["pr_auc_purchase_value"].fn(spark, sf_dir))
 
 
@@ -97,7 +80,7 @@ def test_median_windows_consume_checkpointed_rollup(spark, sf_dir, name):
     gate-visibility lesson), so the provable property is that no
     window subtree touches a raw parquet scan."""
     df = R7N_BANK[name].fn(spark, sf_dir)
-    windows = _window_nodes(df)
+    windows = window_nodes(df)
     assert windows, "expected a WindowExec"
     for wnode in windows:
         sub = wnode.children().apply(0).toString()
@@ -109,8 +92,7 @@ def test_single_pass_statistics_have_no_joins_or_windows(spark, sf_dir):
     the scan: no joins, no windows anywhere."""
     for name in ("matthews_corr_quality_rules", "cohens_d_weekend_value"):
         df = R7N_BANK[name].fn(spark, sf_dir)
-        jplan = df._jdf.queryExecution().sparkPlan()
-        names = [n.getClass().getSimpleName() for n in _walk_jplan(jplan)]
+        names = node_names(df)
         assert not any("Join" in n for n in names), (name, names)
         assert not any(n.startswith("WindowExec") for n in names), (
             name, names)

@@ -9,6 +9,7 @@ import pytest
 
 from de_project_airflow_etl_spark.plans.inspect import (
     bnlj_builds_are_scalar, formatted_plan, scan_read_schema, _walk_jplan,
+    window_nodes,
 )
 from de_project_airflow_etl_spark.registry import all_queries
 
@@ -17,10 +18,7 @@ SURFACE_BANK = {n: q for n, q in all_queries().items()
                 == "de_project_airflow_etl_spark.queries.surfaces_r6"}
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 def test_surface_bank_is_registered():
@@ -42,9 +40,7 @@ def test_dim_variance_window_sits_above_dim_aggregate(spark, sf_dir):
     the 64-row per-dimension aggregate: every WindowExec's subtree must
     contain an Aggregate."""
     df = SURFACE_BANK["embedding_dim_variance_rank"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert windows, "expected a rank WindowExec"
     for wnode in windows:
         sub = list(_walk_jplan(wnode.children().apply(0)))
@@ -58,9 +54,7 @@ def test_shard_plan_windows_are_block_hierarchical(spark, sf_dir):
     the doc-level window must be partitioned by (source, blk) — its
     partitions are bounded by the block size, never raw-corpus-sized."""
     df = SURFACE_BANK["token_budget_shard_plan"].fn(spark, sf_dir)
-    jplan = df._jdf.queryExecution().sparkPlan()
-    windows = [n for n in _walk_jplan(jplan)
-               if n.getClass().getSimpleName().startswith("WindowExec")]
+    windows = window_nodes(df)
     assert len(windows) == 2, [w.nodeName() for w in windows]
     descs = [w.simpleString(30) for w in windows]
     # one window partitioned by (source, blk) — the bounded intra-block

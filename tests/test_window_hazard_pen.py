@@ -24,10 +24,7 @@ _AUDITED_PEN = {
 }
 
 
-@pytest.fixture(autouse=True)
-def _release_caches(spark):
-    yield
-    spark.catalog.clearCache()
+pytestmark = pytest.mark.usefixtures("release_caches")
 
 
 @pytest.mark.parametrize("name", sorted(_AUDITED_PEN))
